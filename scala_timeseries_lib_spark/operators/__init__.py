@@ -8,9 +8,13 @@ identity, e.g. ``url``/``signal`` or ``user_id``/``event_type``) plus:
 - ``value``    double
 - ``validity`` long  -- > 0; the entry covers ``[ts, ts + validity)``
 
-Operators that Catalyst can express stay JVM-side (filters, clamps, explode-
-based splitting, window frames, hash aggregations); only interval-exact
-semantics that have no relational equivalent (general merge, closest-in-
-window sampling, exact sliding-window emission) drop into Arrow-batched
-``applyInPandas`` kernels from ``scala_timeseries_lib_spark.kernel``.
+Each operator has one route, chosen from its inputs. Operators that
+Catalyst can express stay JVM-side (filters, clamps, explode-based
+splitting, window frames, hash aggregations, and the boundary-union plans
+behind every named-op merge, n-ary merge, strict zip, sum/mean rolling and
+the un-resampled exact ``sum`` sweep). Only semantics that need Python or
+that numpy runs faster drop into Arrow-batched ``applyInPandas`` kernels
+from ``scala_timeseries_lib_spark.kernel``: a Python-callable merge op or
+window predicate, closest-in-window sampling, min/max rolling, and the
+median or resampled exact sliding sweep.
 """

@@ -17,34 +17,36 @@ borders relationally.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["apply_per_series", "apply_per_bucket"]
 
-# Estimated (Catalyst sizeInBytes, i.e. roughly compressed-input) bytes per
-# salt bucket. Each bucket is materialized as ONE pandas frame in a Python
-# worker, so this bounds kernel-stage worker memory at any input size; it
-# also sets the task-wave count at toy size (see _default_buckets).
-_BUCKET_BYTES = int(os.environ.get("SPARK_GRAFT_KERNEL_BUCKET_BYTES", str(8 << 20)))
+# Default estimated bytes per salt bucket ($SPARK_GRAFT_KERNEL_BUCKET_BYTES
+# overrides it). Each bucket is materialized as ONE pandas frame in a Python
+# worker, so this approximately bounds kernel-stage worker memory at any
+# input size: the estimate is Catalyst's sizeInBytes, roughly the
+# compressed input, and the decoded pandas frame can be several times
+# larger (the [p, 32p] clamp in _default_buckets caps the error).
+_BUCKET_BYTES = 8 << 20
 
 
 def _default_buckets(df: DataFrame) -> int:
     """Size-adaptive salt-bucket count for the kernel stage.
 
-    ``ceil(estimated_bytes / _BUCKET_BYTES)`` clamped to
-    ``[defaultParallelism, defaultParallelism * 32]``. The estimate is
-    Catalyst's driver-side ``sizeInBytes`` on the already-built plan (no job
-    runs). Rationale, measured round 6 (OPTIMIZATION_r06.md): per-task
-    Arrow/Python overhead dominates small inputs, so tiny inputs want
-    exactly ONE task wave (n = defaultParallelism: 1.33 s -> 0.97 s on the
-    sf0.1 gorilla roundtrip vs the old fixed 4x); huge inputs want buckets
+    ``ceil(estimated_bytes / bucket_bytes)`` clamped to
+    ``[max(defaultParallelism, 16), defaultParallelism * 32]``. The
+    estimate is Catalyst's driver-side ``sizeInBytes`` on the already-built
+    plan (no job runs). Rationale, measured round 6 (OPTIMIZATION_r06.md):
+    per-task Arrow/Python overhead dominates small inputs, so tiny inputs
+    want few task waves: the floor gives exactly one wave on a box with 16
+    or more cores (1.33 s -> 0.97 s on the sf0.1 gorilla roundtrip vs the
+    old fixed 4x), and 16 buckets on smaller boxes; huge inputs want buckets
     bounded by BYTES, not core count, so worker memory stays flat while
     parallelism grows with the data. Falls back to the old fixed
-    ``4 * defaultParallelism`` when the estimate is unusable (streaming
-    frames, unknown-stat sources report 2^63-ish sentinels).
+    ``max(4 * defaultParallelism, 16)`` when the estimate is unusable
+    (streaming frames, unknown-stat sources report 2^63-ish sentinels).
     """
     sc = df.sparkSession.sparkContext
     p = max(sc.defaultParallelism, 1)
@@ -54,7 +56,12 @@ def _default_buckets(df: DataFrame) -> int:
         est = -1
     if est <= 0 or est >= (1 << 50):
         return max(p * 4, 16)
-    return min(max(math.ceil(est / _BUCKET_BYTES), p, 16), p * 32)
+    from ..plans.session import env_positive_int
+
+    bucket_bytes = env_positive_int(
+        "SPARK_GRAFT_KERNEL_BUCKET_BYTES", _BUCKET_BYTES
+    )
+    return min(max(math.ceil(est / bucket_bytes), p, 16), p * 32)
 
 
 def apply_per_series(

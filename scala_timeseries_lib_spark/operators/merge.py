@@ -1,13 +1,13 @@
 """DataFrame-level interval merges (the reference's join family, SURVEY.md 2.6).
 
-The merge is a sort-merge full-outer *interval-alignment* join on time, per
-series key. Spark's hash-partitioned cogroup does the heavy lifting (one
-shuffle per side on the key); the per-key interval logic runs vectorized in
-the numpy kernel (``kernel.merge.merge_apply_numeric``) over Arrow batches.
-
-For the named numeric operators the kernel path is fully vectorized
-(searchsorted over the boundary union); a generic Python ``op`` callable is
-also supported at reduced speed (kernel.merge.merge_entries).
+The merge is a full-outer *interval-alignment* join on time, per series
+key. Every named numeric op (binary, n-ary, strictZip) runs as one
+pure-Catalyst plan: explode each entry into boundary rows, one per-key
+window sort carries each side's value over the elementary segments, the op
+table runs as a CASE expression and a gaps-and-islands pass RLE-compresses.
+Only an arbitrary Python ``op`` callable (the reference's core ``merge``
+API) leaves the JVM: it runs in the offset-packed Arrow kernel
+(``kernel.merge.merge_apply_callable``) per salt bucket.
 """
 
 from __future__ import annotations
@@ -25,9 +25,6 @@ __all__ = [
     "merge_series",
     "merge_series_n",
     "strict_zip_series",
-    "merge_series_relational",
-    "merge_series_n_relational",
-    "strict_zip_series_relational",
     "NUMERIC_OPS",
     "HOT_KEY_THRESHOLD",
 ]
@@ -39,19 +36,6 @@ NUMERIC_OPS = (
 # offset packing maps (series_code, ts) to code*stride + (ts-base); past this
 # product the packed axis would overflow int64 (headroom of 2 bits kept)
 _PACK_LIMIT = 1 << 62
-
-
-def _series_groups(codes, ts, val, dur, side):
-    """Shared scaffolding for the int64-overflow per-series fallbacks:
-    sort all arrays by (code, side, ts) and return them with the group
-    start offsets, so each fallback loop only supplies its kernel call."""
-    import numpy as np
-
-    order = np.lexsort((ts, side, codes))
-    codes_s = codes[order]
-    starts = np.flatnonzero(np.r_[True, codes_s[1:] != codes_s[:-1]])
-    bounds = list(zip(starts, np.r_[starts[1:], codes_s.size]))
-    return (codes_s, ts[order], val[order], dur[order], side[order], bounds)
 
 
 def _pack_codes(codes, ts, dur):
@@ -79,7 +63,6 @@ def merge_series(
     time_slice: int | None = None,
     left_default: float | None = None,
     right_default: float | None = None,
-    engine: str = "auto",
     skew_guard: bool = True,
     hot_threshold: int | None = None,
 ) -> DataFrame:
@@ -92,132 +75,90 @@ def merge_series(
     ``plus_strict``/``minus_strict``/``multiply_strict``
     (TimeSeries.scala:277-328), ``fallback`` (TimeSeries.scala:530-534), OR
     an arbitrary Python callable ``(a_or_None, b_or_None) -> float_or_None``
-    (the reference's core ``merge`` API, TimeSeries.scala:261; segmentation
-    and compression stay vectorized, only the opaque operator runs per
-    elementary segment). Keys present on only one side behave as merging
-    with the empty series (strict ops yield nothing; non-strict ops pass the
-    defined side through).
+    (the reference's core ``merge`` API, TimeSeries.scala:261). Keys present
+    on only one side behave as merging with the empty series (strict ops
+    yield nothing; non-strict ops pass the defined side through).
 
-    ``engine`` picks the physical strategy for the NAMED numeric ops:
+    The route follows from ``op``:
 
-    - ``"relational"`` — pure Catalyst (no Python stage): boundary explode →
-      one per-key window sort computing segment ``lead`` and per-side
-      carried values → op expression → gaps-and-islands RLE. One shuffle
-      end-to-end; whole plan is JVM codegen. Requires ``compress=True``.
-      ``time_slice`` works here too: (key, slice) window partitions plus
-      the per-key RLE border repair (the hot-key escape hatch without
-      leaving the JVM).
-    - ``"kernel"`` — the offset-packed Arrow/numpy bucket kernel (always
-      used for callable ``op``; required for ``compress=False``).
-    - ``"auto"`` (default) — relational for named ops when its requirements
-      hold (measured faster at sf0.1, see BENCH/BASELINE.md crossover
-      note), kernel otherwise. With ``skew_guard`` (default on), auto also
-      routes by KEY POPULATION: any key above ``hot_threshold`` (default
-      ``HOT_KEY_THRESHOLD`` = 1M entries, the measured crossover) merges
-      through an auto-sized ``time_slice`` while the rest keep the plain
-      one-shuffle plan — no caller hint needed for the pathological
-      single-series case. Identical output on every route (pinned).
-      Detection is staged cheapest-first (see ``_route_hot_keys``): a
-      no-job leaf row-count bound proves small inputs hot-key-free and
-      keeps the plan FULLY LAZY; otherwise a 1% sampled count probes for
-      candidates (one lightweight job, no materialization); only a flagged
-      candidate triggers the exact materialize-and-count routing pass.
-      Set ``skew_guard=False`` to skip even the probe. The guard is
-      skipped for ops that cannot slice (minus with both defaults) and
-      when ``time_slice`` is given.
+    - a named op runs the pure-Catalyst plan (no Python stage): boundary
+      explode -> one per-key window sort computing segment ``lead`` and
+      per-side carried values -> op expression -> gaps-and-islands RLE
+      (skipped with ``compress=False``). One shuffle end-to-end.
+    - a callable runs in the offset-packed Arrow kernel per salt bucket;
+      segmentation and compression stay vectorized, only the opaque
+      operator runs per elementary segment.
 
-    ``time_slice`` (ms) is the hot-series escape hatch: one series is
-    otherwise inherently sequential inside its kernel call, so a single
-    pathological key (a domain with billions of snapshots) would create a
-    straggler. With a slice width set, both sides are pre-split at absolute
-    ``k*time_slice`` boundaries JVM-side, each (key, slice) merges as an
-    independent group (the boundary-union merge is local in time), and a
-    relational gaps-and-islands pass re-merges equal contiguous runs across
-    slice borders -- the result is identical to the unsliced merge (pinned
-    by test). Requires ``compress=True`` (the border re-fit is an RLE).
+    ``skew_guard`` (default on) routes a compressed named-op merge by KEY
+    POPULATION: any key above ``hot_threshold`` (default
+    ``HOT_KEY_THRESHOLD`` = 1M entries, the measured crossover) merges
+    through an auto-sized ``time_slice`` while the rest keep the plain
+    one-shuffle plan -- identical output on every route (pinned).
+    Detection is staged cheapest-first (see ``_route_hot_keys``): a no-job
+    leaf row-count bound proves small inputs hot-key-free and keeps the
+    plan FULLY LAZY; otherwise a 1% sampled count probes for candidates
+    (one lightweight job, no materialization); only a flagged candidate
+    triggers the exact materialize-and-count routing pass. Set
+    ``skew_guard=False`` to skip even the probe. The guard never runs for
+    ``compress=False`` (slice borders would split the raw segments), for
+    ops that cannot slice (callables, minus with both defaults), or when
+    ``time_slice`` is given.
+
+    ``time_slice`` (ms) is the manual hot-series escape hatch: one key is
+    otherwise one window partition (a single sort task), so a pathological
+    series would straggle. With a slice width set, both sides are
+    pre-split at absolute ``k*time_slice`` boundaries, every (key, slice)
+    merges as an independent window partition, and the final
+    gaps-and-islands pass (which runs per KEY) re-merges equal contiguous
+    runs across slice borders -- identical output, pinned by test.
+    Requires ``compress=True`` and an op that leaves (undefined, undefined)
+    segments empty: holes crossing slice borders would otherwise be filled
+    per slice.
     """
-    import numpy as np
-    import pandas as pd
-
-    from ..kernel.merge import merge_apply_callable, merge_apply_numeric
-
     is_callable = callable(op)
     if not is_callable and op not in NUMERIC_OPS:
         raise ValueError(f"unknown op {op!r}; expected callable or {NUMERIC_OPS}")
-    if engine not in ("auto", "kernel", "relational"):
-        raise ValueError(f"unknown engine {engine!r}")
-    # ops that may emit a value on an (undefined, undefined) segment cannot
-    # be time-sliced on either engine: holes crossing slice borders would
-    # be filled per-slice (checked again below for the kernel path)
-    _needs_ranges = is_callable or (
+    # ops that may emit a value on an (undefined, undefined) segment
+    fills_holes = is_callable or (
         op == "minus" and left_default is not None and right_default is not None
     )
-    relational_ok = (
-        not is_callable and compress
-        and not (time_slice is not None and _needs_ranges)
-    )
-    if engine == "relational" and not relational_ok:
-        raise ValueError(
-            "engine='relational' supports only named ops with "
-            "compress=True (and no time_slice for ops that fill "
-            "(undefined, undefined) segments)"
-        )
-    if engine in ("relational", "auto") and relational_ok:
-        if (
-            engine == "auto" and skew_guard and time_slice is None
-            and not _needs_ranges
-        ):
-            return _merge_auto_skew(
-                left, right, key_cols, op,
-                left_default, right_default,
-                hot_threshold if hot_threshold is not None
-                else HOT_KEY_THRESHOLD,
-            )
-        return merge_series_relational(
-            left, right, key_cols, op=op,
-            left_default=left_default, right_default=right_default,
-            time_slice=time_slice,
-        )
-    # ops that may emit a value on an (undefined, undefined) segment need
-    # the per-series span windows so packed inter-region gaps stay holes
-    needs_ranges = is_callable or (
-        op == "minus" and left_default is not None and right_default is not None
-    )
-
-    def _kernel(a, b, valid_ranges=None):
-        if is_callable:
-            return merge_apply_callable(
-                *a, *b, op=op, compress=compress, valid_ranges=valid_ranges
-            )
-        return merge_apply_numeric(
-            *a, *b, op=op, compress=compress,
-            left_default=left_default, right_default=right_default,
-            valid_ranges=valid_ranges,
-        )
-
     if time_slice is not None:
         if not compress:
             raise ValueError("time_slice requires compress=True")
-        if needs_ranges:
+        if fills_holes:
             raise ValueError(
                 "time_slice cannot be combined with an op that fills "
                 "(undefined, undefined) segments (callable op, or minus with "
                 "both defaults): holes crossing slice borders would not be "
                 "filled"
             )
-        from .series_ops import split_at_buckets
+    if is_callable:
+        return _merge_callable(left, right, key_cols, op, compress)
 
-        left = split_at_buckets(left, time_slice).withColumnRenamed(
-            "bucket", "_slice"
+    def plan(tagged, ts):
+        return _merge_tagged_relational(
+            tagged, key_cols, op=op, left_default=left_default,
+            right_default=right_default, time_slice=ts, compress=compress,
         )
-        right = split_at_buckets(right, time_slice).withColumnRenamed(
-            "bucket", "_slice"
-        )
-        group_cols = [*key_cols, "_slice"]
-    else:
-        group_cols = key_cols
 
-    key_fields = [left.schema[k] for k in group_cols]
+    tagged = _tag_sides(left, right, key_cols)
+    if skew_guard and compress and time_slice is None and not fills_holes:
+        return _route_hot_keys(tagged, key_cols, plan, hot_threshold)
+    return plan(tagged, time_slice)
+
+
+def _merge_callable(
+    left: DataFrame, right: DataFrame, key_cols: list[str], op, compress: bool
+) -> DataFrame:
+    """Arrow-kernel merge for a Python callable ``op``, one vectorized
+    kernel call per salt bucket."""
+    import numpy as np
+    import pandas as pd
+
+    from ..kernel.merge import merge_apply_callable
+    from ._kernel import apply_per_bucket
+
+    key_fields = [left.schema[k] for k in key_cols]
     out_schema = StructType(
         [
             *key_fields,
@@ -226,8 +167,7 @@ def merge_series(
             StructField("validity", LongType()),
         ]
     )
-
-    from ._kernel import apply_per_bucket
+    out_names = [f.name for f in out_schema.fields]
 
     def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         """Offset-packed merge of a whole salt bucket in ONE vectorized call.
@@ -237,13 +177,14 @@ def merge_series(
         regions can never touch and segments never cross series). The
         boundary-union merge kernel then processes all series of the bucket
         at once -- no per-series Python loop, no per-series numpy-call
-        overhead.
+        overhead. Each series' span window keeps the callable from filling
+        the artificial gaps between packed regions.
         """
         if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        keys = pdf[group_cols]
+            return pd.DataFrame(columns=out_names)
+        keys = pdf[key_cols]
         codes, uniques = pd.factorize(
-            pd.MultiIndex.from_frame(keys) if len(group_cols) > 1 else keys.iloc[:, 0],
+            pd.MultiIndex.from_frame(keys) if len(key_cols) > 1 else keys.iloc[:, 0],
             use_na_sentinel=False,
         )
         ts = pdf["ts"].to_numpy(np.int64)
@@ -254,47 +195,48 @@ def merge_series(
 
         if packed is None:
             # packed axis would overflow int64: per-series loop (correct,
-            # just not batch-vectorized; forced time_slice also re-bounds
-            # the stride if this path ever dominates)
-            codes_s, ts_s, val_s, dur_s, side_s, bounds = _series_groups(
-                codes, ts, val, dur, side
+            # just not batch-vectorized)
+            order = np.lexsort((ts, side, codes))
+            codes_s, ts_s, val_s, dur_s, side_s = (
+                codes[order], ts[order], val[order], dur[order], side[order]
             )
+            starts = np.flatnonzero(np.r_[True, codes_s[1:] != codes_s[:-1]])
             idx_parts, ts_p, val_p, dur_p = [], [], [], []
-            for s0, s1 in bounds:
+            for s0, s1 in zip(starts, np.r_[starts[1:], codes_s.size]):
                 sm = side_s[s0:s1] == 0
-                m_ts, m_val, m_dur = _kernel(
-                    (ts_s[s0:s1][sm], val_s[s0:s1][sm], dur_s[s0:s1][sm]),
-                    (ts_s[s0:s1][~sm], val_s[s0:s1][~sm], dur_s[s0:s1][~sm]),
+                m_ts, m_val, m_dur = merge_apply_callable(
+                    ts_s[s0:s1][sm], val_s[s0:s1][sm], dur_s[s0:s1][sm],
+                    ts_s[s0:s1][~sm], val_s[s0:s1][~sm], dur_s[s0:s1][~sm],
+                    op=op, compress=compress,
                 )
                 ts_p.append(m_ts)
                 val_p.append(m_val)
                 dur_p.append(m_dur)
                 idx_parts.append(np.full(m_ts.size, codes_s[s0], np.int64))
-            m_ts = np.concatenate(ts_p)
             out = pd.DataFrame(
                 {
-                    "ts": m_ts,
+                    "ts": np.concatenate(ts_p),
                     "value": np.concatenate(val_p),
                     "validity": np.concatenate(dur_p),
                 }
             )
             idx = np.concatenate(idx_parts)
         else:
-            valid_ranges = None
-            if needs_ranges:
-                n_codes = int(codes.max()) + 1
-                span_lo = np.full(n_codes, np.iinfo(np.int64).max)
-                span_hi = np.full(n_codes, np.iinfo(np.int64).min)
-                np.minimum.at(span_lo, codes, packed)
-                np.maximum.at(span_hi, codes, packed + dur)
-                valid_ranges = (span_lo, span_hi)
+            n_codes = int(codes.max()) + 1
+            span_lo = np.full(n_codes, np.iinfo(np.int64).max)
+            span_hi = np.full(n_codes, np.iinfo(np.int64).min)
+            np.minimum.at(span_lo, codes, packed)
+            np.maximum.at(span_hi, codes, packed + dur)
 
             def pick(s):
                 m = side == s
                 order = np.argsort(packed[m], kind="stable")
                 return packed[m][order], val[m][order], dur[m][order]
 
-            m_ts, m_val, m_dur = _kernel(pick(0), pick(1), valid_ranges)
+            m_ts, m_val, m_dur = merge_apply_callable(
+                *pick(0), *pick(1), op=op, compress=compress,
+                valid_ranges=(span_lo, span_hi),
+            )
             idx = m_ts // stride
             out = pd.DataFrame(
                 {
@@ -305,26 +247,20 @@ def merge_series(
             )
         key_vals = (
             uniques[idx].to_frame(index=False)
-            if len(group_cols) > 1
-            else pd.DataFrame({group_cols[0]: uniques[idx]})
+            if len(key_cols) > 1
+            else pd.DataFrame({key_cols[0]: uniques[idx]})
         )
-        key_vals.columns = group_cols
+        key_vals.columns = key_cols
         return pd.concat(
             [key_vals.reset_index(drop=True), out], axis=1
-        )[[f.name for f in out_schema.fields]]
+        )[out_names]
 
     # union with a side tag + single salted bucket kernel: one shuffle
     # total, and it sidesteps Spark's self-cogroup attribute ambiguity when
     # both inputs share lineage (two filters of the same parent DataFrame)
-    tagged = left.select(
-        *group_cols, "ts", "value", "validity", F.lit(0).alias("side")
-    ).unionByName(
-        right.select(*group_cols, "ts", "value", "validity", F.lit(1).alias("side"))
+    return apply_per_bucket(
+        _tag_sides(left, right, key_cols), key_cols, _merge_bucket, out_schema
     )
-    merged = apply_per_bucket(tagged, group_cols, _merge_bucket, out_schema)
-    if time_slice is None:
-        return merged
-    return _rle_repair(merged.drop("_slice"), key_cols)
 
 
 def _rle_repair(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -335,7 +271,7 @@ def _rle_repair(df: DataFrame, key_cols: list[str]) -> DataFrame:
     w = Window.partitionBy(*key_cols).orderBy("ts")
     prev_end = F.lag(F.col("ts") + F.col("validity")).over(w)
     prev_val = F.lag("value").over(w)
-    # NaN always breaks: Spark's NaN = NaN is true, but the kernel twins
+    # NaN always breaks: Spark's NaN = NaN is true, but the numpy kernels
     # compress with numpy equality (NaN != NaN), keeping NaN runs split
     brk = F.when(
         prev_end.isNull()
@@ -363,9 +299,9 @@ def _rle_repair(df: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
-def _boundary_rows(tagged: DataFrame, key_cols: list[str], n_value_cols: int = 1):
+def _boundary_rows(tagged: DataFrame, key_cols: list[str]):
     """Explode each fitted entry into a start row (carrying ``struct(end,
-    value…)``) and an end row (carrying null), the shared scaffold of the
+    value)``) and an end row (carrying null), the shared scaffold of the
     relational merges.
 
     Returns the exploded frame plus the two windows every relational merge
@@ -379,16 +315,12 @@ def _boundary_rows(tagged: DataFrame, key_cols: list[str], n_value_cols: int = 1
     handled without a distinct."""
     from pyspark.sql import Window
 
-    value_fields = (
-        [F.col("value")] if n_value_cols == 1
-        else [F.col(f"value{i}") for i in range(n_value_cols)]
-    )
     start = F.struct(
         F.col("ts").alias("p"),
         F.lit(1).alias("is_start"),
         F.struct(
             (F.col("ts") + F.col("validity")).alias("end"),
-            *[v.alias(f"v{i}") for i, v in enumerate(value_fields)],
+            F.col("value").alias("v0"),
         ).alias("carry"),
     )
     # the end row's carry is a typed null: when(False, <same struct>) keeps
@@ -407,10 +339,7 @@ def _boundary_rows(tagged: DataFrame, key_cols: list[str], n_value_cols: int = 1
                             F.lit(False),
                             F.struct(
                                 (F.col("ts") + F.col("validity")).alias("end"),
-                                *[
-                                    v.alias(f"v{i}")
-                                    for i, v in enumerate(value_fields)
-                                ],
+                                F.col("value").alias("v0"),
                             ),
                         ).alias("carry"),
                     ),
@@ -429,7 +358,7 @@ def _boundary_rows(tagged: DataFrame, key_cols: list[str], n_value_cols: int = 1
     return rows, w_carry, w_sort
 
 
-def _carried_value(side_idx: int, w_carry, value_field: str = "v0"):
+def _carried_value(side_idx: int, w_carry):
     """Value of side ``side_idx`` active on the segment starting at this
     row's ``p``: last start-carry of that side, still covering p."""
     carry = F.last(
@@ -439,7 +368,7 @@ def _carried_value(side_idx: int, w_carry, value_field: str = "v0"):
         ),
         ignorenulls=True,
     ).over(w_carry)
-    return F.when(carry["end"] > F.col("p"), carry[value_field])
+    return F.when(carry["end"] > F.col("p"), carry["v0"])
 
 
 def _merge_value_expr(op, a, b, left_default, right_default):
@@ -486,60 +415,21 @@ def _merge_value_expr(op, a, b, left_default, right_default):
 
 
 def _tag_sides(left: DataFrame, right: DataFrame, key_cols: list[str]) -> DataFrame:
-    return left.select(
-        *key_cols, "ts", "value", "validity", F.lit(0).alias("side")
-    ).unionByName(
-        right.select(*key_cols, "ts", "value", "validity", F.lit(1).alias("side"))
+    return _tag_sides_n([left, right], key_cols)
+
+
+def _slice_tagged(tagged: DataFrame, key_cols: list[str], time_slice):
+    """``(tagged, group_cols)``: with a ``time_slice`` the entries are split
+    at absolute ``k*time_slice`` boundaries (the side tag rides through the
+    explode) and grouped per (key, slice)."""
+    if time_slice is None:
+        return tagged, list(key_cols)
+    from .series_ops import split_at_buckets
+
+    tagged = split_at_buckets(tagged, time_slice).withColumnRenamed(
+        "bucket", "_slice"
     )
-
-
-def merge_series_relational(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    op: str = "plus",
-    left_default: float | None = None,
-    right_default: float | None = None,
-    time_slice: int | None = None,
-) -> DataFrame:
-    """Pure-Catalyst binary interval merge (TimeSeriesMerger.scala:13-196
-    semantics, zero Python stages).
-
-    Shape: explode each fitted entry into (start, end) boundary rows; ONE
-    per-key window sort yields both the elementary segment ``[p, lead(p))``
-    and each side's active value on it (running ``last`` of the side's
-    start-carry, masked by its ``end``); the kernel's op table runs as a
-    CASE expression; gaps-and-islands RLE-compresses equal contiguous runs.
-    One shuffle end-to-end — the islands window and final groupBy reuse the
-    per-key hash partitioning (``(key)`` satisfies the ``(key, island)``
-    clustering), and the whole plan is JVM codegen + two sorts.
-
-    ``time_slice`` (ms) is the hot-KEY escape hatch, same contract as the
-    kernel path: one key is otherwise one window partition (a single sort
-    task), so a pathological series would straggle. With a slice width set,
-    both sides are pre-split at absolute ``k*time_slice`` boundaries, every
-    (key, slice) merges as an independent window partition, and the final
-    gaps-and-islands pass (which runs per KEY regardless) re-merges equal
-    contiguous runs across slice borders — identical output, pinned by
-    test. Not valid for ops that fill (undefined, undefined) segments
-    (minus with both defaults): interior holes crossing borders would be
-    filled per-slice. ``merge_series(engine="auto")`` picks the slice
-    automatically for measured-hot keys (see ``skew_guard``).
-
-    Matches ``merge_series(engine="kernel", compress=True)`` exactly; pinned
-    by the randomized twin test (tests/test_relational_merge.py)."""
-    if time_slice is not None and (
-        op == "minus" and left_default is not None and right_default is not None
-    ):
-        raise ValueError(
-            "time_slice cannot be combined with an op that fills "
-            "(undefined, undefined) segments"
-        )
-    return _merge_tagged_relational(
-        _tag_sides(left, right, key_cols), key_cols, op=op,
-        left_default=left_default, right_default=right_default,
-        time_slice=time_slice,
-    )
+    return tagged, [*key_cols, "_slice"]
 
 
 def _merge_tagged_relational(
@@ -549,18 +439,23 @@ def _merge_tagged_relational(
     left_default: float | None = None,
     right_default: float | None = None,
     time_slice: int | None = None,
+    compress: bool = True,
 ) -> DataFrame:
-    """Relational merge body over an already side-tagged union frame (the
-    skew guard feeds filtered subsets of one materialized union here)."""
-    group_cols = list(key_cols)
-    if time_slice is not None:
-        from .series_ops import split_at_buckets
+    """Pure-Catalyst binary interval merge (TimeSeriesMerger.scala:13-196
+    semantics, zero Python stages) over an already side-tagged union frame
+    (the skew guard feeds filtered subsets of one materialized union here).
 
-        # split_at_buckets carries the side tag through the explode
-        tagged = split_at_buckets(tagged, time_slice).withColumnRenamed(
-            "bucket", "_slice"
-        )
-        group_cols = [*key_cols, "_slice"]
+    Shape: explode each fitted entry into (start, end) boundary rows; ONE
+    per-key window sort yields both the elementary segment ``[p, lead(p))``
+    and each side's active value on it (running ``last`` of the side's
+    start-carry, masked by its ``end``); the op table runs as a CASE
+    expression; gaps-and-islands RLE-compresses equal contiguous runs
+    (``compress=False`` stops at the elementary segments). One shuffle
+    end-to-end -- the islands window and final groupBy reuse the per-key
+    hash partitioning (``(key)`` satisfies the ``(key, island)``
+    clustering). ``time_slice`` splits each key into per-(key, slice)
+    window partitions; the per-key RLE repairs the borders."""
+    tagged, group_cols = _slice_tagged(tagged, key_cols, time_slice)
     rows, w_carry, w_sort = _boundary_rows(tagged, group_cols)
     a = _carried_value(0, w_carry)
     b = _carried_value(1, w_carry)
@@ -570,14 +465,13 @@ def _merge_tagged_relational(
         (F.lead("p").over(w_sort) - F.col("p")).alias("validity"),
         _merge_value_expr(op, a, b, left_default, right_default).alias("value"),
     ).where(F.col("validity").isNotNull() & (F.col("validity") > 0)
-            # NaN results drop too: the kernel twin uses NaN as its hole
-            # sentinel, so a NaN input value yields a hole there; match it
+            # NaN results are holes too (the numpy kernel's hole sentinel)
             & F.col("value").isNotNull() & ~F.isnan("value"))
     if time_slice is not None:
         segs = segs.drop("_slice")
-    return _rle_repair(segs, key_cols).select(
-        *key_cols, "ts", "value", "validity"
-    )
+    if compress:
+        segs = _rle_repair(segs, key_cols)
+    return segs.select(*key_cols, "ts", "value", "validity")
 
 
 # Skew-guard defaults, measured on the 4M-entry hot-series torture
@@ -610,21 +504,38 @@ _GUARD_SAMPLE_MIN_ROWS = 50
 _GUARD_BOUND_MAX_FILES = 256
 
 
+# analyzed-plan node classes that never emit more rows than their children
+# together; any other inner node (join, generate/explode, expand, Python
+# map/flatMap UDFs, ...) may multiply rows and voids leaf-based bounds
+_ROW_BOUNDED_NODES = frozenset({
+    "Project", "Filter", "Aggregate", "Window", "Sort", "Union",
+    "Distinct", "Deduplicate", "Repartition", "RepartitionByExpression",
+    "RebalancePartitions", "GlobalLimit", "LocalLimit", "Sample",
+    "SubqueryAlias", "ResolvedHint", "View",
+})
+
+
 def _plan_leaves(df: DataFrame):
-    """Leaves of the analyzed plan, or None when the plan contains a
-    row-expanding operator (join, generate/explode, expand) -- leaf-based
-    row bounds are then unsound. The ANALYZED plan is already computed
-    eagerly at DataFrame construction, so reading it costs no new Catalyst
-    pass (the optimizer only ever removes/fuses operators, never adds
-    row-expanding ones, so the expansion check is equivalent). A column
-    NAME containing a marker word only makes the check conservative."""
+    """Leaves of the analyzed plan, or None when an inner node is not in
+    ``_ROW_BOUNDED_NODES`` -- leaf-based row bounds are then unsound. The
+    walk reads node CLASSES, so column names never affect it. The ANALYZED
+    plan is already computed eagerly at DataFrame construction, so reading
+    it costs no new Catalyst pass (the optimizer only ever removes/fuses
+    operators, never adds row-expanding ones, so the check is
+    equivalent)."""
     try:
-        plan = df._jdf.queryExecution().analyzed()
-        tree = plan.toString()
-        if any(m in tree for m in ("Join", "Generate", "Expand", "Repeat")):
-            return None
-        leaves = plan.collectLeaves()
-        return [leaves.apply(i) for i in range(leaves.size())]
+        stack = [df._jdf.queryExecution().analyzed()]
+        leaves = []
+        while stack:
+            node = stack.pop()
+            children = node.children()
+            n = children.size()
+            if n == 0:
+                leaves.append(node)
+            elif node.getClass().getSimpleName() not in _ROW_BOUNDED_NODES:
+                return None
+            stack.extend(children.apply(i) for i in range(n))
+        return leaves
     except Exception:
         return None
 
@@ -727,7 +638,7 @@ def _route_hot_keys(
     tagged: DataFrame,
     key_cols: list[str],
     merge_fn,
-    hot_threshold: int,
+    hot_threshold: int | None,
 ) -> DataFrame:
     """AQE-style skew routing shared by the whole relational merge family
     (the north rule's hot-domain mandate, BASELINE.json:14). Detection is
@@ -760,7 +671,7 @@ def _route_hot_keys(
          unioned -- the bulk pays zero tax;
        - pathologically many hot keys        -> slice the whole merge.
 
-    ``merge_fn(tagged_subset, time_slice_or_None)`` builds the engine plan.
+    ``merge_fn(tagged_subset, time_slice_or_None)`` builds the merge plan.
     Output is identical on every route (pinned by tests); only the physical
     window partitioning changes. Callers who cannot afford even the sampled
     probe set ``skew_guard=False``.
@@ -775,6 +686,8 @@ def _route_hot_keys(
     cheaper than materializing the full union to executor disks, which is
     what the round-5 guard did on EVERY merge.
     """
+    if hot_threshold is None:
+        hot_threshold = HOT_KEY_THRESHOLD
     bound = _leaf_row_bound(tagged)
     if bound is not None and bound <= hot_threshold:
         return merge_fn(tagged, None)
@@ -844,27 +757,6 @@ def _route_hot_keys(
     return out.unionByName(cold)
 
 
-def _merge_auto_skew(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    op: str,
-    left_default: float | None,
-    right_default: float | None,
-    hot_threshold: int,
-) -> DataFrame:
-    """Skew routing for the binary relational merge — see _route_hot_keys."""
-    return _route_hot_keys(
-        _tag_sides(left, right, key_cols),
-        key_cols,
-        lambda t, ts: _merge_tagged_relational(
-            t, key_cols, op=op, left_default=left_default,
-            right_default=right_default, time_slice=ts,
-        ),
-        hot_threshold,
-    )
-
-
 def _tag_sides_n(dfs: list[DataFrame], key_cols: list[str]) -> DataFrame:
     tagged = None
     for i, df in enumerate(dfs):
@@ -875,39 +767,19 @@ def _tag_sides_n(dfs: list[DataFrame], key_cols: list[str]) -> DataFrame:
     return tagged
 
 
-def merge_series_n_relational(
-    dfs: list[DataFrame],
-    key_cols: list[str],
-    op: str = "plus",
-    time_slice: int | None = None,
-) -> DataFrame:
-    """Pure-Catalyst k-ary merge (``plus`` / ``plus_strict``), same
-    single-sort shape as the binary relational merge with one carry per
-    side. ``time_slice`` is the same hot-key escape as the binary engine
-    (per-(key, slice) window partitions, per-key RLE border repair —
-    identical output, pinned); the n-ary ops are hole-safe to slice (no
-    value on all-undefined segments)."""
-    return _merge_n_tagged_relational(
-        _tag_sides_n(dfs, key_cols), key_cols, len(dfs), op=op,
-        time_slice=time_slice,
-    )
-
-
 def _merge_n_tagged_relational(
     tagged: DataFrame,
     key_cols: list[str],
     n_sides: int,
     op: str,
     time_slice: int | None = None,
+    compress: bool = True,
 ) -> DataFrame:
-    group_cols = list(key_cols)
-    if time_slice is not None:
-        from .series_ops import split_at_buckets
-
-        tagged = split_at_buckets(tagged, time_slice).withColumnRenamed(
-            "bucket", "_slice"
-        )
-        group_cols = [*key_cols, "_slice"]
+    """Pure-Catalyst k-ary merge (``plus`` / ``plus_strict``), same
+    single-sort shape as the binary merge with one carry per side. The
+    n-ary ops are hole-safe to slice (no value on all-undefined
+    segments)."""
+    tagged, group_cols = _slice_tagged(tagged, key_cols, time_slice)
     rows, w_carry, w_sort = _boundary_rows(tagged, group_cols)
     vals = [_carried_value(i, w_carry) for i in range(n_sides)]
     total = None
@@ -923,7 +795,7 @@ def _merge_n_tagged_relational(
     elif op == "plus_strict":
         value = F.when(n_def == n_sides, total)
     else:
-        raise ValueError(f"unknown n-ary relational op {op!r}")
+        raise ValueError(f"unknown n-ary op {op!r}")
     segs = rows.select(
         *group_cols,
         F.col("p").alias("ts"),
@@ -933,27 +805,14 @@ def _merge_n_tagged_relational(
             & F.col("value").isNotNull())
     if time_slice is not None:
         segs = segs.drop("_slice")
+    if compress:
+        segs = _rle_repair(segs, key_cols)
     # NaN sums stay (split by the islands' NaN break) but surface as null,
-    # exactly like the kernel twin's NaN does across the Arrow boundary
-    return _rle_repair(segs, key_cols).select(
+    # like a pandas NaN does across the Arrow boundary
+    return segs.select(
         *key_cols, "ts",
         F.when(~F.isnan("value"), F.col("value")).alias("value"),
         "validity",
-    )
-
-
-def strict_zip_series_relational(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    time_slice: int | None = None,
-) -> DataFrame:
-    """Pure-Catalyst strictZip (TimeSeries.scala:335): segments where BOTH
-    sides are defined, values carried as a pair; RLE merges contiguous runs
-    equal on BOTH values. ``time_slice`` = the hot-key escape (identical
-    output, per-key pair-RLE repairs the borders)."""
-    return _zip_tagged_relational(
-        _tag_sides(left, right, key_cols), key_cols, time_slice=time_slice
     )
 
 
@@ -961,17 +820,14 @@ def _zip_tagged_relational(
     tagged: DataFrame,
     key_cols: list[str],
     time_slice: int | None = None,
+    compress: bool = True,
 ) -> DataFrame:
+    """Pure-Catalyst strictZip (TimeSeries.scala:335): segments where BOTH
+    sides are defined, values carried as a pair; RLE merges contiguous runs
+    equal on BOTH values."""
     from pyspark.sql import Window
 
-    group_cols = list(key_cols)
-    if time_slice is not None:
-        from .series_ops import split_at_buckets
-
-        tagged = split_at_buckets(tagged, time_slice).withColumnRenamed(
-            "bucket", "_slice"
-        )
-        group_cols = [*key_cols, "_slice"]
+    tagged, group_cols = _slice_tagged(tagged, key_cols, time_slice)
     rows, w_carry, w_sort = _boundary_rows(tagged, group_cols)
     a = _carried_value(0, w_carry)
     b = _carried_value(1, w_carry)
@@ -987,40 +843,40 @@ def _zip_tagged_relational(
     )
     if time_slice is not None:
         segs = segs.drop("_slice")
-    # gaps-and-islands on the value PAIR
-    w = Window.partitionBy(*key_cols).orderBy("ts")
-    prev_end = F.lag(F.col("ts") + F.col("validity")).over(w)
-    brk = F.when(
-        prev_end.isNull()
-        | (prev_end != F.col("ts"))
-        | (F.lag("a_value").over(w) != F.col("a_value"))
-        | (F.lag("b_value").over(w) != F.col("b_value"))
-        # numpy twin keeps NaN runs split (NaN != NaN there)
-        | F.isnan(F.col("a_value"))
-        | F.isnan(F.col("b_value")),
-        1,
-    ).otherwise(0)
-    island = F.sum(brk).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    return (
-        segs.withColumn("_island", island)
-        .groupBy(*key_cols, "_island")
-        .agg(
-            F.min("ts").alias("ts"),
-            F.min("a_value").alias("a_value"),
-            F.min("b_value").alias("b_value"),
-            (F.max(F.col("ts") + F.col("validity")) - F.min("ts")).alias(
-                "validity"
-            ),
+    if compress:
+        # gaps-and-islands on the value PAIR
+        w = Window.partitionBy(*key_cols).orderBy("ts")
+        prev_end = F.lag(F.col("ts") + F.col("validity")).over(w)
+        brk = F.when(
+            prev_end.isNull()
+            | (prev_end != F.col("ts"))
+            | (F.lag("a_value").over(w) != F.col("a_value"))
+            | (F.lag("b_value").over(w) != F.col("b_value"))
+            # NaN runs stay split (numpy equality: NaN != NaN)
+            | F.isnan(F.col("a_value"))
+            | F.isnan(F.col("b_value")),
+            1,
+        ).otherwise(0)
+        island = F.sum(brk).over(w.rowsBetween(Window.unboundedPreceding, 0))
+        segs = (
+            segs.withColumn("_island", island)
+            .groupBy(*key_cols, "_island")
+            .agg(
+                F.min("ts").alias("ts"),
+                F.min("a_value").alias("a_value"),
+                F.min("b_value").alias("b_value"),
+                (F.max(F.col("ts") + F.col("validity")) - F.min("ts")).alias(
+                    "validity"
+                ),
+            )
         )
-        .drop("_island")
-        # NaN pair slots surface as null, like the kernel twin's NaN does
-        # across the Arrow boundary (runs already split by the NaN break)
-        .select(
-            *key_cols, "ts",
-            F.when(~F.isnan("a_value"), F.col("a_value")).alias("a_value"),
-            F.when(~F.isnan("b_value"), F.col("b_value")).alias("b_value"),
-            "validity",
-        )
+    # NaN pair slots surface as null, like a pandas NaN does across the
+    # Arrow boundary (compressed runs already split by the NaN break)
+    return segs.select(
+        *key_cols, "ts",
+        F.when(~F.isnan("a_value"), F.col("a_value")).alias("a_value"),
+        F.when(~F.isnan("b_value"), F.col("b_value")).alias("b_value"),
+        "validity",
     )
 
 
@@ -1029,116 +885,22 @@ def strict_zip_series(
     right: DataFrame,
     key_cols: list[str],
     compress: bool = True,
-    engine: str = "auto",
     skew_guard: bool = True,
     hot_threshold: int | None = None,
 ) -> DataFrame:
     """strictZip (TimeSeries.scala:335): tuple-valued segments where BOTH
     series are defined. Output: key cols + ts, a_value, b_value, validity.
-    ``engine="auto"`` routes compressed zips through the pure-Catalyst path
-    (strict_zip_series_relational) with the same automatic hot-key routing
-    as ``merge_series`` (``skew_guard``, _route_hot_keys); ``"kernel"``
-    forces the offset-packed single-call bucket kernel (required for
-    ``compress=False``)."""
-    if engine not in ("auto", "kernel", "relational"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine == "relational" and not compress:
-        raise ValueError("engine='relational' requires compress=True")
-    if engine in ("auto", "relational") and compress:
-        if engine == "auto" and skew_guard:
-            return _route_hot_keys(
-                _tag_sides(left, right, key_cols), key_cols,
-                lambda t, ts: _zip_tagged_relational(t, key_cols, time_slice=ts),
-                hot_threshold if hot_threshold is not None
-                else HOT_KEY_THRESHOLD,
-            )
-        return strict_zip_series_relational(left, right, key_cols)
-    import numpy as np
-    import pandas as pd
-
-    from ..kernel.merge import strict_zip_arrays
-
-    key_fields = [left.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("a_value", DoubleType()),
-            StructField("b_value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    from ._kernel import apply_per_bucket
-
-    def _zip_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        keys = pdf[key_cols]
-        codes, uniques = pd.factorize(
-            pd.MultiIndex.from_frame(keys) if len(key_cols) > 1 else keys.iloc[:, 0],
-            use_na_sentinel=False,
+    Pure Catalyst, with the same automatic hot-key routing of compressed
+    zips as ``merge_series`` (``skew_guard``, _route_hot_keys)."""
+    def plan(tagged, ts):
+        return _zip_tagged_relational(
+            tagged, key_cols, time_slice=ts, compress=compress
         )
-        ts = pdf["ts"].to_numpy(np.int64)
-        dur = pdf["validity"].to_numpy(np.int64)
-        val = pdf["value"].to_numpy(np.float64)
-        side = pdf["side"].to_numpy()
-        packed, stride, base = _pack_codes(codes, ts, dur)
 
-        if packed is None:
-            # int64-overflow fallback: per-series loop
-            codes_s, ts_s, val_s, dur_s, side_s, bounds = _series_groups(
-                codes, ts, val, dur, side
-            )
-            idx_p, ts_p, za_p, zb_p, dur_p = [], [], [], [], []
-            for s0, s1 in bounds:
-                sm = side_s[s0:s1] == 0
-                z_ts, za, zb, z_dur = strict_zip_arrays(
-                    ts_s[s0:s1][sm], val_s[s0:s1][sm], dur_s[s0:s1][sm],
-                    ts_s[s0:s1][~sm], val_s[s0:s1][~sm], dur_s[s0:s1][~sm],
-                    compress=compress,
-                )
-                ts_p.append(z_ts)
-                za_p.append(za)
-                zb_p.append(zb)
-                dur_p.append(z_dur)
-                idx_p.append(np.full(z_ts.size, codes_s[s0], np.int64))
-            z_ts = np.concatenate(ts_p)
-            za, zb = np.concatenate(za_p), np.concatenate(zb_p)
-            z_dur = np.concatenate(dur_p)
-            idx = np.concatenate(idx_p)
-            out = pd.DataFrame(
-                {"ts": z_ts, "a_value": za, "b_value": zb, "validity": z_dur}
-            )
-        else:
-            def pick(s):
-                m = side == s
-                order = np.argsort(packed[m], kind="stable")
-                return packed[m][order], val[m][order], dur[m][order]
-
-            z_ts, za, zb, z_dur = strict_zip_arrays(
-                *pick(0), *pick(1), compress=compress
-            )
-            idx = z_ts // stride
-            out = pd.DataFrame(
-                {"ts": z_ts % stride + base, "a_value": za, "b_value": zb,
-                 "validity": z_dur}
-            )
-        key_vals = (
-            uniques[idx].to_frame(index=False)
-            if len(key_cols) > 1
-            else pd.DataFrame({key_cols[0]: uniques[idx]})
-        )
-        key_vals.columns = key_cols
-        return pd.concat([key_vals.reset_index(drop=True), out], axis=1)[out_names]
-
-    tagged = left.select(
-        *key_cols, "ts", "value", "validity", F.lit(0).alias("side")
-    ).unionByName(
-        right.select(*key_cols, "ts", "value", "validity", F.lit(1).alias("side"))
-    )
-    return apply_per_bucket(tagged, key_cols, _zip_bucket, out_schema)
+    tagged = _tag_sides(left, right, key_cols)
+    if compress and skew_guard:
+        return _route_hot_keys(tagged, key_cols, plan, hot_threshold)
+    return plan(tagged, None)
 
 
 def merge_series_n(
@@ -1146,7 +908,6 @@ def merge_series_n(
     key_cols: list[str],
     op: str = "plus",
     compress: bool = True,
-    engine: str = "auto",
     skew_guard: bool = True,
     hot_threshold: int | None = None,
 ) -> DataFrame:
@@ -1157,112 +918,17 @@ def merge_series_n(
 
     ``op``: ``plus`` (non-strict sum of defined slots) or ``plus_strict``
     (defined only where all k sides are). One shuffle total: all sides are
-    unioned with a side tag and grouped once. ``engine="auto"`` routes
-    compressed merges through the pure-Catalyst path
-    (merge_series_n_relational) with the same automatic hot-key routing as
-    ``merge_series`` (``skew_guard``, _route_hot_keys); ``"kernel"``
-    forces the Arrow kernel.
+    unioned with a side tag and sorted once per key, pure Catalyst, with
+    the same automatic hot-key routing of compressed merges as
+    ``merge_series`` (``skew_guard``, _route_hot_keys).
     """
-    if engine not in ("auto", "kernel", "relational"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine == "relational" and not compress:
-        raise ValueError("engine='relational' requires compress=True")
-    if engine in ("auto", "relational") and compress:
-        n_sides = len(dfs)
-        if engine == "auto" and skew_guard:
-            return _route_hot_keys(
-                _tag_sides_n(dfs, key_cols), key_cols,
-                lambda t, ts: _merge_n_tagged_relational(
-                    t, key_cols, n_sides, op=op, time_slice=ts
-                ),
-                hot_threshold if hot_threshold is not None
-                else HOT_KEY_THRESHOLD,
-            )
-        return merge_series_n_relational(dfs, key_cols, op=op)
-    import numpy as np
-    import pandas as pd
-
-    from ..kernel.merge import merge_apply_numeric_n
-
-    n_sides = len(dfs)
-    key_fields = [dfs[0].schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    from ._kernel import apply_per_bucket
-
-    def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        # same offset-packing as merge_series: disjoint per-series time
-        # regions let one k-sided vectorized call handle the whole bucket
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        keys = pdf[key_cols]
-        codes, uniques = pd.factorize(
-            pd.MultiIndex.from_frame(keys) if len(key_cols) > 1 else keys.iloc[:, 0],
-            use_na_sentinel=False,
+    def plan(tagged, ts):
+        return _merge_n_tagged_relational(
+            tagged, key_cols, len(dfs), op=op, time_slice=ts,
+            compress=compress,
         )
-        ts = pdf["ts"].to_numpy(np.int64)
-        dur = pdf["validity"].to_numpy(np.int64)
-        val = pdf["value"].to_numpy(np.float64)
-        side = pdf["side"].to_numpy()
-        packed, stride, base = _pack_codes(codes, ts, dur)
 
-        if packed is None:
-            # int64-overflow fallback: per-series loop
-            codes_s, ts_s, val_s, dur_s, side_s, bounds = _series_groups(
-                codes, ts, val, dur, side
-            )
-            idx_p, ts_p, val_p, dur_p = [], [], [], []
-            for s0, s1 in bounds:
-                grp_sides = []
-                for i in range(n_sides):
-                    m = side_s[s0:s1] == i
-                    grp_sides.append(
-                        (ts_s[s0:s1][m], val_s[s0:s1][m], dur_s[s0:s1][m])
-                    )
-                m_ts, m_val, m_dur = merge_apply_numeric_n(
-                    grp_sides, op=op, compress=compress
-                )
-                ts_p.append(m_ts)
-                val_p.append(m_val)
-                dur_p.append(m_dur)
-                idx_p.append(np.full(m_ts.size, codes_s[s0], np.int64))
-            m_ts = np.concatenate(ts_p)
-            idx = np.concatenate(idx_p)
-            out = pd.DataFrame(
-                {"ts": m_ts, "value": np.concatenate(val_p),
-                 "validity": np.concatenate(dur_p)}
-            )
-        else:
-            sides = []
-            for i in range(n_sides):
-                m = side == i
-                order = np.argsort(packed[m], kind="stable")
-                sides.append((packed[m][order], val[m][order], dur[m][order]))
-            m_ts, m_val, m_dur = merge_apply_numeric_n(
-                sides, op=op, compress=compress
-            )
-            idx = m_ts // stride
-            out = pd.DataFrame(
-                {"ts": m_ts % stride + base, "value": m_val, "validity": m_dur}
-            )
-        key_vals = (
-            uniques[idx].to_frame(index=False)
-            if len(key_cols) > 1
-            else pd.DataFrame({key_cols[0]: uniques[idx]})
-        )
-        key_vals.columns = key_cols
-        return pd.concat([key_vals.reset_index(drop=True), out], axis=1)[out_names]
-
-    tagged = None
-    for i, df in enumerate(dfs):
-        part = df.select(*key_cols, "ts", "value", "validity", F.lit(i).alias("side"))
-        tagged = part if tagged is None else tagged.unionByName(part)
-    return apply_per_bucket(tagged, key_cols, _merge_bucket, out_schema)
+    tagged = _tag_sides_n(dfs, key_cols)
+    if compress and skew_guard:
+        return _route_hot_keys(tagged, key_cols, plan, hot_threshold)
+    return plan(tagged, None)

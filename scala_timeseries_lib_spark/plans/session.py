@@ -12,9 +12,23 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
+__all__ = ["get_spark", "env_positive_int"]
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+
+def env_positive_int(name: str, default: int) -> int:
+    """``$name`` as a positive integer, ``default`` when unset. Read at the
+    point of use, so a bad value fails the call that needs it (not the
+    package import) with a message naming the variable."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value <= 0:
+        raise ValueError(f"${name} must be a positive integer, got {raw!r}")
+    return value
 
 
 def _default_driver_mem() -> str:
@@ -69,7 +83,8 @@ def get_spark(
         .appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions
+                or env_positive_int("SPARK_GRAFT_SHUFFLE", 32)),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -4,7 +4,8 @@ The default n_buckets is now derived from Catalyst's driver-side size
 estimate: tiny inputs get exactly one task wave (per-task Arrow overhead
 dominates them), huge inputs get bytes-bounded buckets (worker memory stays
 flat as data grows), and unusable estimates fall back to the old fixed
-4 * defaultParallelism.
+4 * defaultParallelism. The integer SPARK_GRAFT_* settings fail with a
+message naming the variable when they are read.
 """
 
 import math
@@ -106,3 +107,24 @@ def test_output_identical_across_bucket_counts(spark):
                                n_buckets=nb)
         rows[nb] = sorted(map(tuple, out.collect()))
     assert rows[1] == rows[4] == rows[32]
+
+
+@pytest.mark.parametrize("raw", ["8MiB", "0", "-5"])
+def test_bucket_bytes_env_rejects_bad_values(spark, monkeypatch, raw):
+    # a bad value fails the call that reads it, naming the variable; the
+    # package import stays unaffected
+    df = spark.range(1000).selectExpr("id as user_id", "id as ts")
+    monkeypatch.setenv("SPARK_GRAFT_KERNEL_BUCKET_BYTES", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_KERNEL_BUCKET_BYTES"):
+        _default_buckets(df)
+    monkeypatch.setenv("SPARK_GRAFT_KERNEL_BUCKET_BYTES", "1")
+    assert _default_buckets(df) == _p(spark) * 32
+
+
+@pytest.mark.parametrize("raw", ["thirty-two", "0"])
+def test_shuffle_env_rejects_bad_values(spark, monkeypatch, raw):
+    from scala_timeseries_lib_spark.plans.session import get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE"):
+        get_spark()

@@ -1,23 +1,27 @@
-"""Relational (pure-Catalyst) merge engine vs the Arrow kernel twin.
+"""Relational (pure-Catalyst) merge family and windows vs the numpy kernels.
 
-The relational path (operators/merge.py merge_series_relational) must be
-indistinguishable from the kernel path (engine="kernel") for every named
-numeric op, including per-side minus defaults, single-sided keys, empty
-sides, and touching/overlapping/gapped entries. Reference semantics:
-TimeSeriesMerger.scala:13-196, NumericTimeSeries.scala:18-45,
+Every named-op merge (binary, n-ary, strictZip), the sum/mean rolling and
+the un-resampled exact ``sum`` sweep run as Catalyst plans. Each must
+reproduce the numpy kernel (``kernel.merge``, ``kernel.window``) applied per
+key to the collected input rows -- for every named op, compressed or not,
+including per-side minus defaults, single-sided keys, empty sides, NaN
+values, and touching/overlapping/gapped entries. Reference semantics:
+TimeSeriesMerger.scala:13-196, NumericTimeSeries.scala:18-64,
 TimeSeries.scala:277-335,530-534.
 """
 
 import numpy as np
 import pytest
 
+from scala_timeseries_lib_spark.kernel.merge import (
+    merge_apply_numeric,
+    merge_apply_numeric_n,
+    strict_zip_arrays,
+)
 from scala_timeseries_lib_spark.operators.merge import (
     merge_series,
     merge_series_n,
-    merge_series_n_relational,
-    merge_series_relational,
     strict_zip_series,
-    strict_zip_series_relational,
 )
 
 
@@ -42,8 +46,79 @@ def _mk(spark, seed, n_keys=6, max_entries=40, only_keys=None):
     )
 
 
+def _sorted(rows):
+    # null-safe: a null key or value must still sort
+    return sorted(rows, key=lambda t: tuple((v is None, v) for v in t))
+
+
 def _canon(df):
-    return sorted(tuple(r) for r in df.collect())
+    return _sorted(tuple(r) for r in df.collect())
+
+
+def _by_key(df):
+    per_key = {}
+    for r in df.collect():
+        per_key.setdefault(r["user_id"], []).append(
+            (r["ts"], r["value"], r["validity"])
+        )
+    return {k: sorted(v) for k, v in per_key.items()}
+
+
+def _arrays(entries):
+    ts, val, dur = zip(*entries) if entries else ((), (), ())
+    return (np.array(ts, np.int64), np.array(val, np.float64),
+            np.array(dur, np.int64))
+
+
+def _rows(key, cols):
+    """Kernel output arrays ``(ts, value..., validity)`` as output rows; a
+    NaN value becomes null, as a pandas NaN does across the Arrow
+    boundary."""
+    def val(x):
+        return None if np.isnan(x) else float(x)
+
+    return [
+        (key, int(c[0]), *(val(v) for v in c[1:-1]), int(c[-1]))
+        for c in zip(*cols)
+    ]
+
+
+def _ref_merge(a, b, op, compress=True, **kw):
+    pa, pb = _by_key(a), _by_key(b)
+    return _sorted(
+        row
+        for k in pa.keys() | pb.keys()
+        for row in _rows(k, merge_apply_numeric(
+            *_arrays(pa.get(k, [])), *_arrays(pb.get(k, [])),
+            op=op, compress=compress, **kw,
+        ))
+    )
+
+
+def _ref_merge_n(sides, op, compress=True):
+    per = [_by_key(s) for s in sides]
+    return _sorted(
+        row
+        for k in set().union(*per)
+        for row in _rows(k, merge_apply_numeric_n(
+            [_arrays(p.get(k, [])) for p in per], op=op, compress=compress
+        ))
+    )
+
+
+def _ref_zip(a, b, compress=True):
+    pa, pb = _by_key(a), _by_key(b)
+    return _sorted(
+        row
+        for k in pa.keys() & pb.keys()
+        for row in _rows(k, strict_zip_arrays(
+            *_arrays(pa[k]), *_arrays(pb[k]), compress=compress
+        ))
+    )
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 OPS = [
@@ -62,10 +137,12 @@ OPS = [
 @pytest.mark.parametrize("op,kw", OPS, ids=[f"{o}-{sorted(k)}" for o, k in OPS])
 def test_relational_matches_kernel(spark, op, kw):
     a, b = _mk(spark, 11), _mk(spark, 22)
-    kernel = _canon(merge_series(a, b, ["user_id"], op=op, engine="kernel", **kw))
-    rel = _canon(merge_series_relational(a, b, ["user_id"], op=op, **kw))
-    assert kernel == rel
-    assert len(kernel) > 0
+    for compress in (True, False):
+        got = _canon(merge_series(
+            a, b, ["user_id"], op=op, compress=compress, **kw
+        ))
+        assert got == _ref_merge(a, b, op, compress=compress, **kw), compress
+        assert len(got) > 0
 
 
 def test_relational_single_sided_keys(spark):
@@ -73,22 +150,26 @@ def test_relational_single_sided_keys(spark):
     a = _mk(spark, 31, only_keys={"k0", "k1", "k2"})
     b = _mk(spark, 32, only_keys={"k2", "k3", "k4"})
     for op in ("plus", "plus_strict", "fallback"):
-        kernel = _canon(merge_series(a, b, ["user_id"], op=op, engine="kernel"))
-        rel = _canon(merge_series_relational(a, b, ["user_id"], op=op))
-        assert kernel == rel, op
+        got = _canon(merge_series(a, b, ["user_id"], op=op))
+        assert got == _ref_merge(a, b, op), op
 
 
 def test_relational_empty_side(spark):
     a = _mk(spark, 41)
     empty = a.limit(0)
-    rel = _canon(merge_series_relational(a, empty, ["user_id"], op="plus"))
-    kernel = _canon(merge_series(a, empty, ["user_id"], op="plus", engine="kernel"))
-    assert rel == kernel
-    assert _canon(merge_series_relational(a, empty, ["user_id"], op="plus_strict")) == []
-    # the auto skew guard must survive empty/one-sided inputs (checkpoint
-    # + count over zero rows) and match the plain plan
-    assert _canon(merge_series(a, empty, ["user_id"], op="plus")) == kernel
+    for compress in (True, False):
+        got = _canon(merge_series(
+            a, empty, ["user_id"], op="plus", compress=compress
+        ))
+        assert got == _ref_merge(a, empty, "plus", compress=compress)
+        assert len(got) > 0
+    # the skew guard must survive empty/one-sided inputs
+    assert _canon(merge_series(a, empty, ["user_id"], op="plus_strict")) == []
     assert _canon(merge_series(empty, empty, ["user_id"], op="plus")) == []
+    assert _canon(merge_series_n([a, empty], ["user_id"])) == _ref_merge_n(
+        [a, empty], "plus"
+    )
+    assert _canon(strict_zip_series(a, empty, ["user_id"])) == []
 
 
 def test_relational_touching_entries_same_instant(spark):
@@ -102,9 +183,8 @@ def test_relational_touching_entries_same_instant(spark):
         [("k", 5, 10.0, 10), ("k", 15, 20.0, 5)],
         "user_id string, ts long, value double, validity long",
     )
-    rel = _canon(merge_series_relational(a, b, ["user_id"], op="plus"))
-    kernel = _canon(merge_series(a, b, ["user_id"], op="plus", engine="kernel"))
-    assert rel == kernel
+    rel = _canon(merge_series(a, b, ["user_id"], op="plus"))
+    assert rel == _ref_merge(a, b, "plus")
     # spot-check one segment: at t=10 both new a-entry (2.0) and b (10.0)
     assert ("k", 10, 12.0, 5) in rel
 
@@ -119,37 +199,41 @@ def test_relational_rle_compression(spark):
         [("k", 0, 2.0, 10), ("k", 10, 1.0, 10)],
         "user_id string, ts long, value double, validity long",
     )
-    rel = _canon(merge_series_relational(a, b, ["user_id"], op="plus"))
+    rel = _canon(merge_series(a, b, ["user_id"], op="plus"))
     assert rel == [("k", 0, 3.0, 20)]
+    # compress=False keeps the elementary segments
+    raw = _canon(merge_series(a, b, ["user_id"], op="plus", compress=False))
+    assert raw == [("k", 0, 3.0, 10), ("k", 10, 3.0, 10)]
 
 
 def test_n_ary_relational_matches_kernel(spark):
-    # engine="kernel" is load-bearing: the dispatcher default is relational,
-    # so omitting it would compare the relational path to itself
     sides = [_mk(spark, s) for s in (51, 52, 53)]
-    for op in ("plus", "plus_strict"):
-        kernel = _canon(
-            merge_series_n(sides, ["user_id"], op=op, engine="kernel")
-        )
-        rel = _canon(merge_series_n_relational(sides, ["user_id"], op=op))
-        assert kernel == rel, op
-        assert len(kernel) > 0
+    for n in (2, 3):
+        for op in ("plus", "plus_strict"):
+            for compress in (True, False):
+                got = _canon(merge_series_n(
+                    sides[:n], ["user_id"], op=op, compress=compress
+                ))
+                assert got == _ref_merge_n(sides[:n], op, compress), (
+                    n, op, compress
+                )
+                assert len(got) > 0
 
 
 def test_strict_zip_relational_matches_kernel(spark):
     a, b = _mk(spark, 61), _mk(spark, 62)
-    kernel = _canon(strict_zip_series(a, b, ["user_id"], engine="kernel"))
-    rel = _canon(strict_zip_series_relational(a, b, ["user_id"]))
-    assert kernel == rel
-    assert len(kernel) > 0
+    for compress in (True, False):
+        got = _canon(strict_zip_series(a, b, ["user_id"], compress=compress))
+        assert got == _ref_zip(a, b, compress), compress
+        assert len(got) > 0
 
 
 def test_nan_values_match_kernel_split(spark):
     """NaN input values: the kernels keep NaN segments but never RLE-merge
     adjacent NaN runs (numpy NaN != NaN); Spark's NaN = NaN is true, so the
     relational islands must break on NaN explicitly. Binary named ops treat
-    NaN results as holes on BOTH engines (kernel keep-mask, relational
-    filter); n-ary and strict-zip keep them, split."""
+    NaN results as holes (the kernel's hole sentinel); n-ary and strict-zip
+    keep them, split, and surface them as null."""
     nan = float("nan")
     rows_a = [("k", 0, 1.0, 10), ("k", 10, nan, 10), ("k", 20, nan, 10),
               ("k", 35, 2.0, 5)]
@@ -158,37 +242,27 @@ def test_nan_values_match_kernel_split(spark):
     a = spark.createDataFrame(rows_a, schema)
     b = spark.createDataFrame(rows_b, schema)
 
-    def _cmp_nan(k_rows, r_rows):
-        assert len(k_rows) == len(r_rows)
-        for kr, rr in zip(k_rows, r_rows):
-            for kv, rv in zip(kr, rr):
-                if isinstance(kv, float) and np.isnan(kv):
-                    assert isinstance(rv, float) and np.isnan(rv)
-                else:
-                    assert kv == rv
-
-    # binary: NaN results are holes on both engines
-    for op in ("plus", "plus_strict", "fallback"):
-        kernel = _canon(merge_series(a, b, ["user_id"], op=op, engine="kernel"))
-        rel = _canon(merge_series_relational(a, b, ["user_id"], op=op))
-        _cmp_nan(kernel, rel)
-    # n-ary: NaN kept, adjacent NaN runs stay split like the kernel
-    for op in ("plus", "plus_strict"):
-        kernel = _canon(
-            merge_series_n([a, b], ["user_id"], op=op, engine="kernel")
-        )
-        rel = _canon(merge_series_n_relational([a, b], ["user_id"], op=op))
-        _cmp_nan(kernel, rel)
-    # strict zip: NaN pair slots kept, split
-    kernel = _canon(strict_zip_series(a, b, ["user_id"], engine="kernel"))
-    rel = _canon(strict_zip_series_relational(a, b, ["user_id"]))
-    _cmp_nan(kernel, rel)
+    for compress in (True, False):
+        for op in ("plus", "plus_strict", "fallback"):
+            got = _canon(merge_series(
+                a, b, ["user_id"], op=op, compress=compress
+            ))
+            assert got == _ref_merge(a, b, op, compress), (op, compress)
+        for op in ("plus", "plus_strict"):
+            got = _canon(merge_series_n(
+                [a, b], ["user_id"], op=op, compress=compress
+            ))
+            assert got == _ref_merge_n([a, b], op, compress), (op, compress)
+        got = _canon(strict_zip_series(a, b, ["user_id"], compress=compress))
+        assert got == _ref_zip(a, b, compress), compress
+    # the fixture really produces NaN (null) slots
+    assert any(None in r for r in _ref_zip(a, b))
 
 
 def test_skew_guard_routes_hot_keys(spark):
-    """engine='auto' must detect a key above hot_threshold WITHOUT a caller
+    """The guard must detect a key above hot_threshold WITHOUT a caller
     hint, merge it through an auto-sized time_slice, keep the cold keys on
-    the plain plan, and produce output identical to every manual plan."""
+    the plain plan, and produce output identical to the numpy kernel."""
     from pyspark.sql import functions as F
 
     a, b = _mk(spark, 201), _mk(spark, 202)
@@ -207,9 +281,7 @@ def test_skew_guard_routes_hot_keys(spark):
     left = a.unionByName(hot_a)
     right = b.unionByName(hot_b)
 
-    expected = _canon(merge_series(
-        left, right, ["user_id"], op="plus", engine="kernel"
-    ))
+    expected = _ref_merge(left, right, "plus")
     # guard fires (threshold 1000 < 10k hot entries): split routing
     routed = _canon(merge_series(
         left, right, ["user_id"], op="plus", hot_threshold=1000
@@ -224,48 +296,48 @@ def test_skew_guard_routes_hot_keys(spark):
     ))
     assert lazy == expected
     # the routed plan stays zero-Python
-    plan = merge_series(
+    assert "FlatMapGroupsInPandas" not in _plan(merge_series(
         left, right, ["user_id"], op="plus", hot_threshold=1000
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan
+    ))
     # null key components must route too (null-safe predicate)
-    def _canon_null(df):
-        return sorted(
-            (tuple(r) for r in df.collect()),
-            key=lambda t: tuple((v is None, v) for v in t),
-        )
-
-    null_hot_a = hot_a.withColumn("user_id", F.lit(None).cast("string"))
-    null_hot_b = hot_b.withColumn("user_id", F.lit(None).cast("string"))
-    exp_null = _canon_null(merge_series(
-        a.unionByName(null_hot_a), b.unionByName(null_hot_b), ["user_id"],
-        op="plus", engine="kernel",
+    null_a = a.unionByName(
+        hot_a.withColumn("user_id", F.lit(None).cast("string"))
+    )
+    null_b = b.unionByName(
+        hot_b.withColumn("user_id", F.lit(None).cast("string"))
+    )
+    got_null = _canon(merge_series(
+        null_a, null_b, ["user_id"], op="plus", hot_threshold=1000,
     ))
-    got_null = _canon_null(merge_series(
-        a.unionByName(null_hot_a), b.unionByName(null_hot_b), ["user_id"],
-        op="plus", hot_threshold=1000,
-    ))
-    assert got_null == exp_null
+    assert got_null == _ref_merge(null_a, null_b, "plus")
 
 
 def test_n_ary_and_zip_time_slice_and_guard(spark):
     """The hot-key escape generalizes to the whole merge family: n-ary and
-    strict-zip sliced outputs equal the plain plans, and the auto guard
-    routes a synthetic hot key with no caller hint."""
+    strict-zip sliced outputs equal the plain plans, and the guard routes a
+    synthetic hot key with no caller hint."""
     from pyspark.sql import functions as F
+
+    from scala_timeseries_lib_spark.operators.merge import (
+        _merge_n_tagged_relational,
+        _tag_sides,
+        _tag_sides_n,
+        _zip_tagged_relational,
+    )
 
     sides = [_mk(spark, s) for s in (221, 222, 223)]
     for op in ("plus", "plus_strict"):
-        base = _canon(merge_series_n_relational(sides, ["user_id"], op=op))
-        sliced = _canon(merge_series_n_relational(
-            sides, ["user_id"], op=op, time_slice=41
+        base = _canon(merge_series_n(sides, ["user_id"], op=op))
+        sliced = _canon(_merge_n_tagged_relational(
+            _tag_sides_n(sides, ["user_id"]), ["user_id"], 3, op=op,
+            time_slice=41,
         ))
         assert base == sliced, op
         assert len(base) > 0
     a, b = _mk(spark, 231), _mk(spark, 232)
-    zbase = _canon(strict_zip_series_relational(a, b, ["user_id"]))
-    zsliced = _canon(strict_zip_series_relational(
-        a, b, ["user_id"], time_slice=53
+    zbase = _canon(strict_zip_series(a, b, ["user_id"]))
+    zsliced = _canon(_zip_tagged_relational(
+        _tag_sides(a, b, ["user_id"]), ["user_id"], time_slice=53
     ))
     assert zbase == zsliced
     assert len(zbase) > 0
@@ -276,139 +348,148 @@ def test_n_ary_and_zip_time_slice_and_guard(spark):
         F.lit(10).cast("long").alias("validity"),
     )
     hs = [s.unionByName(hot) for s in sides]
-    exp = _canon(merge_series_n(hs, ["user_id"], op="plus", engine="kernel"))
     got = _canon(merge_series_n(hs, ["user_id"], op="plus", hot_threshold=1000))
-    assert got == exp
+    assert got == _ref_merge_n(hs, "plus")
     za, zb = a.unionByName(hot), b.unionByName(hot)
-    zexp = _canon(strict_zip_series(za, zb, ["user_id"], engine="kernel"))
     zgot = _canon(strict_zip_series(za, zb, ["user_id"], hot_threshold=1000))
-    assert zgot == zexp
+    assert zgot == _ref_zip(za, zb)
 
 
-def test_auto_engine_routes_named_ops_relationally(spark):
+def test_auto_engine_routes_named_ops_relationally(spark, monkeypatch):
+    """Each operator's route follows from its inputs alone. Named-op
+    merges, n-ary merges and strict zips never enter Python, compressed or
+    not; a callable op, closest-in-window sampling, the median and
+    resampled exact sweeps and min/max rolling keep the Arrow kernel."""
+    from scala_timeseries_lib_spark.operators import merge as merge_mod
+    from scala_timeseries_lib_spark.operators.window import (
+        rolling_values,
+        sample_closest,
+        sliding_window_exact,
+    )
+
     a, b = _mk(spark, 71), _mk(spark, 72)
-    df = merge_series(a, b, ["user_id"], op="plus")  # engine="auto"
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(merge_series(a, b, ["user_id"], op="plus"))
     assert "FlatMapGroupsInPandas" not in plan
     assert plan.count("Exchange") == 1
+    for compress in (True, False):
+        for op, kw in OPS:
+            assert "FlatMapGroupsInPandas" not in _plan(merge_series(
+                a, b, ["user_id"], op=op, compress=compress, **kw
+            )), (op, kw, compress)
+        for op in ("plus", "plus_strict"):
+            assert "FlatMapGroupsInPandas" not in _plan(merge_series_n(
+                [a, b, a], ["user_id"], op=op, compress=compress
+            ))
+        assert "FlatMapGroupsInPandas" not in _plan(strict_zip_series(
+            a, b, ["user_id"], compress=compress
+        ))
     # callable op must still take the kernel
-    df2 = merge_series(
+    assert "FlatMapGroupsInPandas" in _plan(merge_series(
         a, b, ["user_id"],
         op=lambda x, y: (x or 0.0) + (y or 0.0) or None,
-    )
-    assert "FlatMapGroupsInPandas" in df2._jdf.queryExecution().executedPlan().toString()
+    ))
+    kernel_routes = [
+        sample_closest(a, ["user_id"], 20),
+        sliding_window_exact(a, ["user_id"], 60, "median"),
+        sliding_window_exact(a, ["user_id"], 60, "mean", sample_rate=20),
+        sliding_window_exact(a, ["user_id"], 60, "sum", sample_rate=20),
+        rolling_values(a, ["user_id"], 60, agg="min"),
+        rolling_values(a, ["user_id"], 60, agg="max"),
+    ]
+    for df in kernel_routes:
+        assert "FlatMapGroupsInPandas" in _plan(df)
+    for df in (
+        sliding_window_exact(a, ["user_id"], 60, "sum"),
+        rolling_values(a, ["user_id"], 60, agg="sum"),
+        rolling_values(a, ["user_id"], 60, agg="mean"),
+    ):
+        assert "FlatMapGroupsInPandas" not in _plan(df)
+    # the skew guard never runs on (so never slices) an uncompressed merge:
+    # slice borders would split its raw segments
+    def _guard(*_args, **_kw):
+        raise AssertionError("skew guard ran on an uncompressed merge")
+
+    monkeypatch.setattr(merge_mod, "_route_hot_keys", _guard)
+    merge_series(a, b, ["user_id"], compress=False, hot_threshold=1)
+    merge_series_n([a, b], ["user_id"], compress=False, hot_threshold=1)
+    strict_zip_series(a, b, ["user_id"], compress=False, hot_threshold=1)
 
 
 def test_relational_engine_rejects_unsupported(spark):
     a, b = _mk(spark, 81), _mk(spark, 82)
-    with pytest.raises(ValueError):
-        merge_series(a, b, ["user_id"], op="plus", engine="relational",
-                     compress=False)
-    with pytest.raises(ValueError):
-        merge_series(a, b, ["user_id"], op=lambda x, y: None,
-                     engine="relational")
+    # the slice-border RLE repair needs compressed output
+    with pytest.raises(ValueError, match="compress"):
+        merge_series(a, b, ["user_id"], op="plus", compress=False,
+                     time_slice=100)
+    with pytest.raises(ValueError, match="n-ary op"):
+        merge_series_n([a, b], ["user_id"], op="minus")
 
 
 def test_relational_time_slice_identical_output(spark):
     # the hot-key escape hatch must not change results: slice at absolute
     # boundaries, merge per (key, slice), RLE-repair across borders
     a, b = _mk(spark, 91), _mk(spark, 92)
-    base = _canon(merge_series_relational(a, b, ["user_id"], op="plus"))
-    sliced = _canon(
-        merge_series_relational(a, b, ["user_id"], op="plus", time_slice=37)
-    )
+    base = _canon(merge_series(a, b, ["user_id"], op="plus"))
+    sliced = _canon(merge_series(a, b, ["user_id"], op="plus", time_slice=37))
     assert base == sliced
-    # and through the dispatcher (auto engine now accepts time_slice)
-    via_dispatch = _canon(
-        merge_series(a, b, ["user_id"], op="plus", time_slice=37)
-    )
-    assert base == via_dispatch
-    plan = merge_series(
+    assert base == _ref_merge(a, b, "plus")
+    assert "FlatMapGroupsInPandas" not in _plan(merge_series(
         a, b, ["user_id"], op="plus", time_slice=37
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan
+    ))
 
 
 def test_relational_time_slice_rejects_hole_filling_ops(spark):
+    # ops that fill (undefined, undefined) segments cannot be sliced: holes
+    # crossing slice borders would be filled per slice
     a, b = _mk(spark, 93), _mk(spark, 94)
-    with pytest.raises(ValueError):
-        merge_series_relational(
+    with pytest.raises(ValueError, match="time_slice"):
+        merge_series(
             a, b, ["user_id"], op="minus",
             left_default=1.0, right_default=2.0, time_slice=100,
         )
+    with pytest.raises(ValueError, match="time_slice"):
+        merge_series(a, b, ["user_id"], op=lambda x, y: 0.0, time_slice=100)
 
 
 def test_rolling_relational_matches_kernel(spark):
     """rolling(sum|mean) via cumulative sums minus an as-of end-event carry
-    (operators/window.py rolling_values_relational) must match the
-    contiguous-range kernel bit-for-bit on fitted series."""
+    and rolling(min|max) via the kernel's RMQ must match the sequential
+    kernel.window.rolling per key (integer values: every sum is exact)."""
+    from scala_timeseries_lib_spark.kernel import window as kwin
     from scala_timeseries_lib_spark.operators.window import rolling_values
 
     df = _mk(spark, 101)
-    for agg in ("sum", "mean"):
+    per_key = _by_key(df)
+    aggs = {"sum": sum, "mean": lambda v: sum(v) / len(v),
+            "min": min, "max": max}
+
+    def ref(agg, window_ms, compress):
+        return _sorted(
+            (k, t, float(v), d)
+            for k, entries in per_key.items()
+            for t, v, d in kwin.rolling(
+                entries, aggs[agg], window_ms, compress=compress
+            )
+        )
+
+    for agg in aggs:
         for window_ms in (13, 60, 500):
-            kernel = _canon(rolling_values(
-                df, ["user_id"], window_ms, agg=agg, engine="kernel"
-            ))
-            rel = _canon(rolling_values(
-                df, ["user_id"], window_ms, agg=agg, engine="relational"
-            ))
-            assert kernel == rel, (agg, window_ms)
-            assert len(kernel) > 0
-    # uncompressed twin too (no RLE pass)
-    k = _canon(rolling_values(df, ["user_id"], 60, compress=False,
-                              engine="kernel"))
-    r = _canon(rolling_values(df, ["user_id"], 60, compress=False,
-                              engine="relational"))
-    assert k == r
-    # min/max must stay on the kernel (order statistics need RMQ)
-    plan = rolling_values(
-        df, ["user_id"], 60, agg="min"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
-    plan2 = rolling_values(
-        df, ["user_id"], 60, agg="sum"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan2
+            got = _canon(rolling_values(df, ["user_id"], window_ms, agg=agg))
+            assert got == ref(agg, window_ms, True), (agg, window_ms)
+            assert len(got) > 0
+    # uncompressed too (no RLE pass), on both routes
+    for agg in ("sum", "min"):
+        got = _canon(rolling_values(df, ["user_id"], 60, agg=agg,
+                                    compress=False))
+        assert got == ref(agg, 60, False), agg
     with pytest.raises(ValueError):
-        rolling_values(df, ["user_id"], 60, agg="min", engine="relational")
-
-
-def test_sample_closest_relational_matches_kernel(spark):
-    """Closest-in-window sampling via two as-of carries over one per-key
-    sort (operators/window.py sample_closest_relational) must match the
-    vectorized kernel across rates, raw and compressed."""
-    from scala_timeseries_lib_spark.operators.window import sample_closest
-
-    df = _mk(spark, 111, max_entries=60)
-    for rate in (7, 20, 121):
-        for compress in (False, True):
-            kernel = _canon(sample_closest(
-                df, ["user_id"], rate, compress=compress, engine="kernel"
-            ))
-            rel = _canon(sample_closest(
-                df, ["user_id"], rate, compress=compress,
-                engine="relational",
-            ))
-            assert kernel == rel, (rate, compress)
-            assert len(kernel) > 0
-    # the relational path is zero-Python; the AUTO default stays on the
-    # kernel (measured faster on every realistic shape -- see docstring)
-    rel_plan = sample_closest(
-        df, ["user_id"], 20, engine="relational"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in rel_plan
-    auto_plan = sample_closest(
-        df, ["user_id"], 20
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in auto_plan
+        rolling_values(df, ["user_id"], 60, agg="median")
 
 
 def test_sliding_exact_relational_matches_sequential(spark):
-    """The zero-Python exact-sweep twin must reproduce the SEQUENTIAL
+    """The zero-Python exact ``sum`` sweep must reproduce the SEQUENTIAL
     sweep's accumulation bit-for-bit (drops retract before adds at each
-    cursor, same float order), for sum over raw holey entries and mean
-    over the closest-in-window resampled grid."""
+    cursor, same float order) over raw holey entries."""
     from scala_timeseries_lib_spark.kernel import window as kwin
     from scala_timeseries_lib_spark.kernel.fitter import fit
     from scala_timeseries_lib_spark.operators.window import (
@@ -417,87 +498,75 @@ def test_sliding_exact_relational_matches_sequential(spark):
 
     df = _mk(spark, 301, n_keys=8, max_entries=50)
     width = 60
+    expected = []
+    for key, entries in _by_key(df).items():
+        emitted = []
+        for (ts, _c, validity), a in kwin.window_sweep(
+            entries, width, kwin.SumAggregator()
+        ):
+            if a is not None:
+                emitted.append((ts, float(a), validity))
+        for ts, v, d in fit(emitted, compress=True):
+            expected.append((key, ts, v, d))
 
-    def seq_ref(agg_factory, sample_rate=None):
-        per_key = {}
-        for r in df.collect():
-            per_key.setdefault(r["user_id"], []).append(
-                (r["ts"], r["value"], r["validity"])
-            )
-        out = []
-        for key, entries in per_key.items():
-            entries.sort()
-            emitted = []
-            for (ts, _c, validity), a in kwin.window_sweep(
-                entries, width, agg_factory(), sample_rate, True
-            ):
-                if a is not None:
-                    emitted.append((ts, float(a), validity))
-            for ts, v, d in fit(emitted, compress=True):
-                out.append((key, ts, v, d))
-        return sorted(out)
-
-    for agg, factory, rate in (
-        ("sum", kwin.SumAggregator, None),
-        ("mean", kwin.MeanAggregator, 20),
-    ):
-        rel = _canon(sliding_window_exact(
-            df, ["user_id"], width, agg,
-            sample_rate=rate, engine="relational", compress=True,
-        ))
-        assert rel == seq_ref(factory, rate), agg
-        assert len(rel) > 50
-        # compress=False twin too (every emission, no RLE)
-        rel_raw = _canon(sliding_window_exact(
-            df, ["user_id"], width, agg,
-            sample_rate=rate, engine="relational", compress=False,
-        ))
-        assert len(rel_raw) >= len(rel)
-    # the relational plan is zero-Python; auto stays on the kernel
-    plan = sliding_window_exact(
-        df, ["user_id"], width, "sum", engine="relational"
-    )._jdf.queryExecution().executedPlan().toString()
+    rel = _canon(sliding_window_exact(df, ["user_id"], width, "sum"))
+    assert rel == _sorted(expected)
+    assert len(rel) > 50
+    # compress=False emits every segment, no RLE
+    rel_raw = _canon(sliding_window_exact(
+        df, ["user_id"], width, "sum", compress=False,
+    ))
+    assert len(rel_raw) >= len(rel)
+    plan = _plan(sliding_window_exact(df, ["user_id"], width, "sum"))
     assert "FlatMapGroupsInPandas" not in plan
     assert "MapInPandas" not in plan
-    with pytest.raises(ValueError):
-        sliding_window_exact(
-            df, ["user_id"], width, "median", engine="relational"
-        )
 
 
 def test_sliding_exact_relational_matches_kernel_rounded(spark):
-    """Vs the VECTORIZED kernel engine: identical up to the documented
-    ~1e-13 prefix-difference float divergence (compare at 9 decimals,
-    same rounding the oracle queries apply)."""
+    """Both routes of the exact sweep vs the VECTORIZED numpy sweep applied
+    per key: the relational ``sum`` is identical up to the documented
+    ~1e-13 prefix-difference float divergence (compare at 9 decimals, same
+    rounding the oracle queries apply); the resampled ``mean`` is the
+    kernel route itself."""
+    from scala_timeseries_lib_spark.kernel import window as kwin
+    from scala_timeseries_lib_spark.kernel.sample import (
+        sample_arrays_closest_grouped,
+    )
     from scala_timeseries_lib_spark.operators.window import (
         sliding_window_exact,
     )
 
     df = _mk(spark, 311, n_keys=6, max_entries=40)
+    per_key = _by_key(df)
 
     def rounded(rows):
-        return sorted(
-            (r[0], r[1], round(r[2], 9), r[3]) for r in rows
-        )
+        return sorted((r[0], r[1], round(r[2], 9), r[3]) for r in rows)
+
+    def ref(agg, rate):
+        rows = []
+        for key, entries in per_key.items():
+            ts, val, dur = _arrays(entries)
+            cols = (np.zeros(ts.size, np.int64), ts, val, dur)
+            if rate is not None:
+                cols = sample_arrays_closest_grouped(*cols, rate)
+            _codes, *out = kwin.window_sweep_grouped(*cols, 80, agg=agg)
+            rows += _rows(key, out)
+        return rounded(rows)
 
     for agg, rate in (("sum", None), ("mean", 25)):
-        kernel = rounded(_canon(sliding_window_exact(
-            df, ["user_id"], 80, agg, sample_rate=rate, engine="kernel",
-            compress=False,
+        got = rounded(_canon(sliding_window_exact(
+            df, ["user_id"], 80, agg, sample_rate=rate, compress=False,
         )))
-        rel = rounded(_canon(sliding_window_exact(
-            df, ["user_id"], 80, agg, sample_rate=rate,
-            engine="relational", compress=False,
-        )))
-        assert kernel == rel, agg
-        assert len(kernel) > 50
+        assert got == ref(agg, rate), agg
+        assert len(got) > 50
 
 
 def test_relational_stress_high_entropy(spark):
     """One wide adversarial batch instead of per-example fuzzing (a Spark
     round per hypothesis example would be minutes): 40 keys mixing dense
     RLE chains, long validities, negative timestamps, huge magnitudes, and
-    singleton series — kernel and relational must agree on every op."""
+    singleton series — the relational plans must match the kernels on
+    every op."""
     rng = np.random.default_rng(987)
     rows_a, rows_b = [], []
     for k in range(40):
@@ -531,12 +600,9 @@ def test_relational_stress_high_entropy(spark):
         rows_b, "user_id string, ts long, value double, validity long"
     )
     for op, kw in OPS:
-        kernel = _canon(
-            merge_series(a, b, ["user_id"], op=op, engine="kernel", **kw)
-        )
-        rel = _canon(merge_series_relational(a, b, ["user_id"], op=op, **kw))
-        assert kernel == rel, op
-        assert len(kernel) > 100
+        rel = _canon(merge_series(a, b, ["user_id"], op=op, **kw))
+        assert rel == _ref_merge(a, b, op, **kw), op
+        assert len(rel) > 100
 
     # same adversarial batch through the relational exact sweep vs the
     # sequential kernel (negative timestamps, dense RLE chains, huge
@@ -563,8 +629,6 @@ def test_relational_stress_high_entropy(spark):
             ]
             for ts, v, d in fit(emitted, compress=True):
                 expected.append((key, ts, v, d))
-        got = _canon(sliding_window_exact(
-            a, ["user_id"], width, "sum", engine="relational",
-        ))
-        assert got == sorted(expected), width
+        got = _canon(sliding_window_exact(a, ["user_id"], width, "sum"))
+        assert got == _sorted(expected), width
         assert len(got) > 1000

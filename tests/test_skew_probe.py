@@ -56,6 +56,9 @@ def test_leaf_row_bound_on_parquet_union(spark, pq_sides):
         "k", F.explode(F.sequence(F.lit(0), F.lit(3)))
     )
     assert _leaf_row_bound(exploded) is None
+    # ... but a column NAME containing an operator word must not
+    renamed = tagged.withColumnRenamed("user_id", "JoinedAt")
+    assert _leaf_row_bound(renamed) == 2 * n
 
 
 def test_leaf_key_frame_requires_key_by_name(spark, pq_sides):
@@ -81,7 +84,8 @@ def test_sampled_probe_routes_parquet_hot_key(spark, pq_sides):
     threshold (5_000 * 1% = 50 expected rows = the soundness floor): the
     leaf bound (44k) cannot clear the input, the leaf-key probe flags the
     hot key, the exact pass routes it, and the output still equals the
-    kernel engine's."""
+    numpy kernel's per key."""
+    from scala_timeseries_lib_spark.kernel.merge import merge_apply_numeric
     from scala_timeseries_lib_spark.operators.merge import merge_series
 
     a, b = pq_sides
@@ -89,8 +93,19 @@ def test_sampled_probe_routes_parquet_hot_key(spark, pq_sides):
     def canon(df):
         return sorted(tuple(r) for r in df.collect())
 
-    expected = canon(
-        merge_series(a, b, ["user_id"], op="plus", engine="kernel")
+    def arrays(df):
+        per_key = {}
+        for r in df.orderBy("ts").collect():
+            per_key.setdefault(r["user_id"], []).append(
+                (r["ts"], r["value"], r["validity"])
+            )
+        return {k: [np.array(c) for c in zip(*v)] for k, v in per_key.items()}
+
+    pa, pb = arrays(a), arrays(b)
+    expected = sorted(
+        (k, int(t), float(v), int(d))
+        for k in pa
+        for t, v, d in zip(*merge_apply_numeric(*pa[k], *pb[k], op="plus"))
     )
     routed = canon(
         merge_series(a, b, ["user_id"], op="plus", hot_threshold=5_000)

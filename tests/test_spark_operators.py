@@ -439,11 +439,17 @@ class TestOffsetPackingOverflowGuard:
         got = merge_series(
             make_df(spark, left), make_df(spark, right), ["key"], op="plus"
         )
+        # a callable op runs the Arrow kernel's per-series overflow path
+        got_callable = merge_series(
+            make_df(spark, left), make_df(spark, right), ["key"],
+            op=kmerge.op_non_strict_plus,
+        )
         for k in left:
             expected = kmerge.merge_entries(
                 left[k], right.get(k, []), kmerge.op_non_strict_plus
             )
             assert collect_series(got, k) == expected
+            assert collect_series(got_callable, k) == expected
 
     def test_zip_and_nary_overflow_fallback(self, spark):
         from scala_timeseries_lib_spark.operators.merge import (

@@ -123,7 +123,7 @@ def main() -> None:
     t_m_sliced, out_m_sliced = timed(
         lambda: merge_probe(time_slice=3_600_000 * 24), k=2
     )
-    # the round-5 headline: engine="auto" with NO caller hint must detect
+    # the round-5 headline: the skew guard with NO caller hint must detect
     # the 4M-entry key and land within ~1.1x of the best manual plan
     t_m_auto, out_m_auto = timed(lambda: merge_probe(skew_guard=True), k=2)
 
