@@ -47,23 +47,6 @@ def _boundaries(sides):
     return sorted(set(pts))
 
 
-def _value_at(entries, t):
-    """Value of an ordered, fitted entry list at time ``t`` (None in holes).
-
-    Linear-cursor-free lookup via bisect on starts; entries are
-    non-overlapping so the candidate is the last entry starting <= t.
-    """
-    import bisect
-
-    starts = [e[0] for e in entries]
-    i = bisect.bisect_right(starts, t) - 1
-    if i >= 0:
-        ts, value, validity = entries[i]
-        if t < ts + validity:
-            return value
-    return None
-
-
 def merge_entries(a, b, op, compress: bool = True):
     """General binary interval merge over tuple-form entries.
 

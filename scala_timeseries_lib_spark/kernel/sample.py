@@ -28,8 +28,15 @@ __all__ = [
 ]
 
 
+def _check_rate(rate) -> None:
+    # a zero rate never advances the grid (the sequential cursor would spin)
+    if rate <= 0:
+        raise ValueError(f"rate must be positive, got {rate!r}")
+
+
 def sample(entries, start: int, rate: int, use_closest: bool, compress: bool = False):
     """Port of the lazy-stream sampler TimeSeries.scala:601-646 (exact rules)."""
+    _check_rate(rate)
     entries = list(entries)
     n = len(entries)
     out = []
@@ -105,6 +112,7 @@ def sample_arrays_closest(ts, value, validity, start: int, rate: int):
     defined-at-p with the successor beyond the half-window, or strictly
     closer than the successor).
     """
+    _check_rate(rate)
     ts = np.asarray(ts, np.int64)
     value = np.asarray(value)
     validity = np.asarray(validity, np.int64)
@@ -162,6 +170,7 @@ def sample_arrays_closest_grouped(codes, ts, value, validity, rate: int):
     ``None`` when ``n_series * stride`` would overflow the packed axis
     (callers fall back to the per-series kernel).
     """
+    _check_rate(rate)
     codes = np.asarray(codes, np.int64)
     ts = np.asarray(ts, np.int64)
     value = np.asarray(value)

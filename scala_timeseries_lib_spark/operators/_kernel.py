@@ -1,4 +1,4 @@
-"""Salted-bucket dispatch for per-series kernels.
+"""Salted-bucket dispatch and the bucket codec for the Arrow kernels.
 
 ``applyInPandas`` costs ~2-3 ms of Arrow/pandas overhead per Spark group.
 Web-scale series tables have millions of small series, so grouping by the
@@ -12,6 +12,23 @@ lands in one bucket (its kernel is order-dependent); the escape hatch for
 that shape is time-slicing -- see ``merge_series(time_slice=...)``, which
 splits the series at absolute time boundaries and repairs the RLE at the
 borders relationally.
+
+:func:`apply_grouped` is the one pandas<->numpy boundary of every
+entries -> entries kernel operator (fit, callable merge, closest sampling,
+exact and dynamic sweeps, min/max rolling). Per bucket it sorts rows by
+``(key, ts)``, factorizes the keys into ascending int64 codes and calls
+
+- ``grouped_fn(codes, ts, value, validity, *extra)`` -> ``(codes, ts,
+  value, validity)`` numpy arrays for the whole bucket, or ``None`` when
+  the kernel's packed time axis would overflow int64;
+- on ``None`` (or when ``grouped_fn`` is ``None``),
+  ``series_fn(ts, value, validity, *extra)`` -> ``(ts, value, validity)``
+  once per series,
+
+then optionally RLE-compresses the output and rebuilds the key columns.
+The output is always :func:`entries_schema`. :func:`apply_per_bucket`
+stays the raw dispatcher for kernels whose output is not an entries table
+(Gorilla blocks).
 """
 
 from __future__ import annotations
@@ -20,8 +37,9 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-__all__ = ["apply_per_series", "apply_per_bucket"]
+__all__ = ["apply_grouped", "apply_per_bucket", "entries_schema"]
 
 # Default estimated bytes per salt bucket ($SPARK_GRAFT_KERNEL_BUCKET_BYTES
 # overrides it). Each bucket is materialized as ONE pandas frame in a Python
@@ -64,47 +82,6 @@ def _default_buckets(df: DataFrame) -> int:
     return min(max(math.ceil(est / bucket_bytes), p, 16), p * 32)
 
 
-def apply_per_series(
-    df: DataFrame,
-    key_cols: list[str],
-    series_fn,
-    out_schema,
-    n_buckets: int | None = None,
-    sort_within: str | None = "ts",
-):
-    """Run ``series_fn(key_tuple, pdf) -> pdf`` once per distinct series.
-
-    ``out_schema`` must start with the key columns. The per-series frames
-    returned by ``series_fn`` must NOT include the key columns; they are
-    attached here.
-    """
-    import pandas as pd
-
-    if n_buckets is None:
-        n_buckets = _default_buckets(df)
-
-    out_names = [f.name for f in out_schema.fields]
-
-    def _bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        for key, g in pdf.groupby(key_cols, sort=False):
-            if not isinstance(key, tuple):
-                key = (key,)
-            if sort_within is not None:
-                g = g.sort_values(sort_within, kind="mergesort")
-            res = series_fn(key, g)
-            if res is None or len(res) == 0:
-                continue
-            for col, val in zip(key_cols, key):
-                res[col] = val
-            frames.append(res[out_names])
-        if not frames:
-            return pd.DataFrame(columns=out_names)
-        return pd.concat(frames, ignore_index=True)
-
-    return _dispatch(df, key_cols, _bucket, out_schema, n_buckets)
-
-
 def apply_per_bucket(
     df: DataFrame,
     key_cols: list[str],
@@ -113,12 +90,115 @@ def apply_per_bucket(
     n_buckets: int | None = None,
 ):
     """Run ``bucket_fn(pdf) -> pdf`` once per salt bucket (a whole batch of
-    series, key columns included in both input and output). For kernels that
-    can vectorize ACROSS series (e.g. the offset-packed merge) this removes
-    the per-series Python loop entirely."""
+    series, key columns included in both input and output). Kernels whose
+    output is an entries table go through :func:`apply_grouped` instead."""
     if n_buckets is None:
         n_buckets = _default_buckets(df)
     return _dispatch(df, key_cols, bucket_fn, out_schema, n_buckets)
+
+
+def entries_schema(df: DataFrame, key_cols: list[str]) -> StructType:
+    """``df``'s key fields followed by the entry columns."""
+    return StructType(
+        [
+            *(df.schema[k] for k in key_cols),
+            StructField("ts", LongType()),
+            StructField("value", DoubleType()),
+            StructField("validity", LongType()),
+        ]
+    )
+
+
+def apply_grouped(
+    df: DataFrame,
+    key_cols: list[str],
+    grouped_fn,
+    series_fn,
+    compress: bool = False,
+    extra_cols=(),
+) -> DataFrame:
+    """Run an entries -> entries kernel per salt bucket (module docstring).
+
+    ``extra_cols`` name further input columns handed to both kernels after
+    ``validity`` (e.g. the merge's ``side`` tag). ``compress`` RLE-fits the
+    kernel output per series (``fit_arrays_grouped``). ``df`` reaches the
+    dispatcher as given, so the bucket count sees the caller's plan."""
+    import numpy as np
+    import pandas as pd
+
+    from ..kernel.fitter import fit_arrays_grouped
+
+    schema = entries_schema(df, key_cols)
+    out_names = schema.fieldNames()
+    in_cols = [*key_cols, "ts", "value", "validity", *extra_cols]
+
+    def _bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(pdf) == 0:
+            return pd.DataFrame(columns=out_names)
+        pdf = pdf[in_cols].sort_values(
+            [*key_cols, "ts"], kind="mergesort", ignore_index=True
+        )
+        keys = pdf[key_cols]
+        codes, uniques = pd.factorize(
+            pd.MultiIndex.from_frame(keys) if len(key_cols) > 1
+            else keys.iloc[:, 0],
+            use_na_sentinel=False,
+        )
+        codes = codes.astype(np.int64, copy=False)
+        cols = (
+            pdf["ts"].to_numpy(np.int64),
+            pdf["value"].to_numpy(np.float64),
+            pdf["validity"].to_numpy(np.int64),
+            *(pdf[c].to_numpy() for c in extra_cols),
+        )
+        res = None if grouped_fn is None else grouped_fn(codes, *cols)
+        if res is None:
+            res = _per_series(series_fn, codes, cols)
+        oc, ot, ov, od = res
+        if compress:
+            keep, ot, ov, od = fit_arrays_grouped(oc, ot, ov, od, compress=True)
+            oc = oc[keep]
+        if len(key_cols) > 1:
+            out = uniques[oc].to_frame(index=False)
+            out.columns = key_cols
+        else:
+            out = pd.DataFrame({key_cols[0]: uniques[oc]})
+        out["ts"] = ot
+        out["value"] = ov
+        out["validity"] = od
+        return out
+
+    return apply_per_bucket(df, key_cols, _bucket, schema)
+
+
+def _per_series(series_fn, codes, cols):
+    """``series_fn`` once per run of equal ``codes``, outputs concatenated
+    as ``(codes, ts, value, validity)``."""
+    import numpy as np
+
+    starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
+    parts = []
+    for s0, s1 in zip(starts, np.r_[starts[1:], codes.size]):
+        t, v, d = series_fn(*(c[s0:s1] for c in cols))
+        parts.append((
+            np.full(len(t), codes[s0], np.int64),
+            np.asarray(t, np.int64),
+            np.asarray(v, np.float64),
+            np.asarray(d, np.int64),
+        ))
+    return tuple(np.concatenate(p) for p in zip(*parts))
+
+
+def as_rows(ts, value, validity) -> list:
+    """Column arrays -> ``[(ts, value, validity), ...]`` Python entries, the
+    input of the sequential kernels."""
+    return list(zip(ts.tolist(), value.tolist(), validity.tolist()))
+
+
+def as_columns(rows) -> tuple:
+    """Python entries -> ``(ts, value, validity)`` columns (a
+    ``series_fn`` result)."""
+    return tuple(zip(*rows)) if rows else ((), (), ())
 
 
 def _dispatch(df, key_cols, bucket_fn, out_schema, n_buckets):

@@ -8,12 +8,14 @@ Scale notes:
 - ``derive_entries`` is pure JVM: one hash shuffle on the series key (the
   window partition), then ``lead`` -- no Python.
 - ``fit_entries`` needs the RLE/trim semantics; it runs the vectorized numpy
-  fitter per series group via ``applyInPandas`` (one shuffle on the key).
+  fitter per salt bucket via ``_kernel.apply_grouped`` (one shuffle).
   For already-ordered, non-overlapping input with ``compress=False`` it is a
   no-op and should be skipped entirely.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -87,28 +89,14 @@ def fit_entries(df: DataFrame, key_cols: list[str], compress: bool = True) -> Da
     never cross a series boundary, kernel.fitter.fit_arrays_grouped) -- no
     per-series Python loop.
     """
-    import pandas as pd
+    from ..kernel.fitter import fit_arrays, fit_arrays_grouped
+    from ._kernel import apply_grouped
 
-    from ..kernel.fitter import fit_arrays_grouped
-    from ._kernel import apply_per_bucket
-
-    out_schema = df.select(*key_cols, *ENTRY_COLS).schema
-    out_names = [f.name for f in out_schema.fields]
-
-    def _fit_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort",
-                              ignore_index=True)
-        codes, _ = pd.factorize(pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False)
-        keep_idx, ts, value, validity = fit_arrays_grouped(
-            codes, pdf["ts"].to_numpy(), pdf["value"].to_numpy(),
-            pdf["validity"].to_numpy(), compress=compress,
+    def _fit_grouped(codes, ts, value, validity):
+        keep, ts, value, validity = fit_arrays_grouped(
+            codes, ts, value, validity, compress=compress
         )
-        out = pdf.iloc[keep_idx][key_cols].reset_index(drop=True)
-        out["ts"] = ts
-        out["value"] = value
-        out["validity"] = validity
-        return out[out_names]
+        return codes[keep], ts, value, validity
 
-    return apply_per_bucket(df, key_cols, _fit_bucket, out_schema)
+    return apply_grouped(df, key_cols, _fit_grouped,
+                         partial(fit_arrays, compress=compress))

@@ -14,12 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType
 
 __all__ = [
     "merge_series",
@@ -153,113 +148,49 @@ def _merge_callable(
     """Arrow-kernel merge for a Python callable ``op``, one vectorized
     kernel call per salt bucket."""
     import numpy as np
-    import pandas as pd
 
     from ..kernel.merge import merge_apply_callable
-    from ._kernel import apply_per_bucket
+    from ._kernel import apply_grouped
 
-    key_fields = [left.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    def _merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _merge_grouped(codes, ts, val, dur, side):
         """Offset-packed merge of a whole salt bucket in ONE vectorized call.
 
         Every series gets a disjoint [idx*stride, (idx+1)*stride) region of
         the int64 time axis (stride > the bucket's full time span, so
         regions can never touch and segments never cross series). The
         boundary-union merge kernel then processes all series of the bucket
-        at once -- no per-series Python loop, no per-series numpy-call
-        overhead. Each series' span window keeps the callable from filling
-        the artificial gaps between packed regions.
+        at once. Each series' span window keeps the callable from filling
+        the artificial gaps between packed regions. Rows arrive sorted by
+        (key, ts), so each side's packed axis is already ascending.
         """
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        keys = pdf[key_cols]
-        codes, uniques = pd.factorize(
-            pd.MultiIndex.from_frame(keys) if len(key_cols) > 1 else keys.iloc[:, 0],
-            use_na_sentinel=False,
-        )
-        ts = pdf["ts"].to_numpy(np.int64)
-        dur = pdf["validity"].to_numpy(np.int64)
-        val = pdf["value"].to_numpy(np.float64)
-        side = pdf["side"].to_numpy()
         packed, stride, base = _pack_codes(codes, ts, dur)
-
         if packed is None:
-            # packed axis would overflow int64: per-series loop (correct,
-            # just not batch-vectorized)
-            order = np.lexsort((ts, side, codes))
-            codes_s, ts_s, val_s, dur_s, side_s = (
-                codes[order], ts[order], val[order], dur[order], side[order]
-            )
-            starts = np.flatnonzero(np.r_[True, codes_s[1:] != codes_s[:-1]])
-            idx_parts, ts_p, val_p, dur_p = [], [], [], []
-            for s0, s1 in zip(starts, np.r_[starts[1:], codes_s.size]):
-                sm = side_s[s0:s1] == 0
-                m_ts, m_val, m_dur = merge_apply_callable(
-                    ts_s[s0:s1][sm], val_s[s0:s1][sm], dur_s[s0:s1][sm],
-                    ts_s[s0:s1][~sm], val_s[s0:s1][~sm], dur_s[s0:s1][~sm],
-                    op=op, compress=compress,
-                )
-                ts_p.append(m_ts)
-                val_p.append(m_val)
-                dur_p.append(m_dur)
-                idx_parts.append(np.full(m_ts.size, codes_s[s0], np.int64))
-            out = pd.DataFrame(
-                {
-                    "ts": np.concatenate(ts_p),
-                    "value": np.concatenate(val_p),
-                    "validity": np.concatenate(dur_p),
-                }
-            )
-            idx = np.concatenate(idx_parts)
-        else:
-            n_codes = int(codes.max()) + 1
-            span_lo = np.full(n_codes, np.iinfo(np.int64).max)
-            span_hi = np.full(n_codes, np.iinfo(np.int64).min)
-            np.minimum.at(span_lo, codes, packed)
-            np.maximum.at(span_hi, codes, packed + dur)
-
-            def pick(s):
-                m = side == s
-                order = np.argsort(packed[m], kind="stable")
-                return packed[m][order], val[m][order], dur[m][order]
-
-            m_ts, m_val, m_dur = merge_apply_callable(
-                *pick(0), *pick(1), op=op, compress=compress,
-                valid_ranges=(span_lo, span_hi),
-            )
-            idx = m_ts // stride
-            out = pd.DataFrame(
-                {
-                    "ts": m_ts % stride + base,
-                    "value": m_val,
-                    "validity": m_dur,
-                }
-            )
-        key_vals = (
-            uniques[idx].to_frame(index=False)
-            if len(key_cols) > 1
-            else pd.DataFrame({key_cols[0]: uniques[idx]})
+            return None
+        n_codes = int(codes.max()) + 1
+        span_lo = np.full(n_codes, np.iinfo(np.int64).max)
+        span_hi = np.full(n_codes, np.iinfo(np.int64).min)
+        np.minimum.at(span_lo, codes, packed)
+        np.maximum.at(span_hi, codes, packed + dur)
+        a, b = side == 0, side == 1
+        m_ts, m_val, m_dur = merge_apply_callable(
+            packed[a], val[a], dur[a], packed[b], val[b], dur[b],
+            op=op, compress=compress, valid_ranges=(span_lo, span_hi),
         )
-        key_vals.columns = key_cols
-        return pd.concat(
-            [key_vals.reset_index(drop=True), out], axis=1
-        )[out_names]
+        return m_ts // stride, m_ts % stride + base, m_val, m_dur
+
+    def _merge_one(ts, val, dur, side):
+        a, b = side == 0, side == 1
+        return merge_apply_callable(
+            ts[a], val[a], dur[a], ts[b], val[b], dur[b],
+            op=op, compress=compress,
+        )
 
     # union with a side tag + single salted bucket kernel: one shuffle
     # total, and it sidesteps Spark's self-cogroup attribute ambiguity when
     # both inputs share lineage (two filters of the same parent DataFrame)
-    return apply_per_bucket(
-        _tag_sides(left, right, key_cols), key_cols, _merge_bucket, out_schema
+    return apply_grouped(
+        _tag_sides(left, right, key_cols), key_cols, _merge_grouped,
+        _merge_one, extra_cols=("side",),
     )
 
 
@@ -658,8 +589,9 @@ def _route_hot_keys(
        plan. (Used only when ``hot_threshold * fraction >=
        _GUARD_SAMPLE_MIN_ROWS``; tiny thresholds go straight to 3.)
     3. **Exact routing, rare path.** Only with a flagged candidate is the
-       projected union materialized ONCE (``localCheckpoint`` -- the same
-       bytes the merge shuffle was about to move anyway) and counted
+       projected union materialized ONCE (``checkpoint`` to the session's
+       checkpoint dir when one is set, ``localCheckpoint`` otherwise -- the
+       same bytes the merge shuffle was about to move anyway) and counted
        exactly, then routed:
 
        - no key above ``hot_threshold``      -> the plain one-shuffle plan;
@@ -676,12 +608,13 @@ def _route_hot_keys(
     window partitioning changes. Callers who cannot afford even the sampled
     probe set ``skew_guard=False``.
 
-    Failure modes, documented: ``localCheckpoint`` (rare path only) is
-    non-reliable storage -- on a real cluster an executor loss invalidates
-    the checkpointed blocks and downstream queries on the returned frame
-    fail; acceptable here because the path only runs when a hot key was
-    already flagged, the routed plan reads the materialized input 2-3
-    times, and re-running the query re-materializes. The sampled probe adds
+    Failure modes, documented: with a checkpoint dir set
+    (``sparkContext.setCheckpointDir``) the rare path writes reliable
+    storage that survives executor loss. Without one it falls back to
+    ``localCheckpoint``, which is not reliable -- on a real cluster an
+    executor loss invalidates the checkpointed blocks and downstream
+    queries on the returned frame fail; re-running the query
+    re-materializes. Clusters should set a checkpoint dir. The sampled probe adds
     one recomputation of the input lineage (a scan at 100 TB) -- still far
     cheaper than materializing the full union to executor disks, which is
     what the round-5 guard did on EVERY merge.
@@ -713,7 +646,10 @@ def _route_hot_keys(
         )
         if not probed:
             return merge_fn(tagged, None)
-    tagged = tagged.localCheckpoint(eager=True)
+    if tagged.sparkSession.sparkContext.getCheckpointDir():
+        tagged = tagged.checkpoint(eager=True)
+    else:
+        tagged = tagged.localCheckpoint(eager=True)
     hot = (
         tagged.groupBy(*key_cols)
         .agg(

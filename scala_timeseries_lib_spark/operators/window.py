@@ -16,9 +16,10 @@ Two execution strategies, chosen by semantics (SURVEY.md 2.9 / 3.3):
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 __all__ = [
     "sliding_grid_agg",
@@ -102,6 +103,24 @@ _AGG_FACTORIES = {
 }
 
 
+def _aggregator(agg: str, timeunit: str):
+    """A fresh sequential ``kernel.window`` aggregator for ``agg``."""
+    from ..kernel import window as kwin
+
+    if agg == "median":
+        # the queueAggregator case (CollectAggregator, reference
+        # BasicAggregators.scala:127-136 / Aggregator.scala:60-63): the
+        # whole window rides along and the aggregate is a function of
+        # its contents; empty windows are holes (None)
+        import statistics  # noqa: PLC0415
+
+        return kwin.CollectAggregator(
+            fn=lambda vals: statistics.median(vals) if vals else None
+        )
+    cls = getattr(kwin, _AGG_FACTORIES[agg])
+    return cls(timeunit) if agg == "integral" else cls()
+
+
 def sliding_window_exact(
     df: DataFrame,
     key_cols: list[str],
@@ -137,118 +156,51 @@ def sliding_window_exact(
     to the SEQUENTIAL sweep's accumulation order. Resampled aggregates stay
     on the kernel (the dense resample grid is numpy's home turf).
     """
-    import numpy as np
-    import pandas as pd
-
+    if window_width <= 0:
+        raise ValueError("Needs a strictly positive window size")
+    if sample_rate is not None and sample_rate <= 0:
+        raise ValueError(f"sample_rate must be positive, got {sample_rate!r}")
+    if agg not in _AGG_FACTORIES and agg != "median":
+        raise ValueError(f"unknown agg {agg!r}")
     if agg == "sum" and sample_rate is None:
         return _sliding_sum_relational(
             df, key_cols, window_width, compress=compress
         )
 
     from ..kernel import window as kwin
-    from ..kernel.fitter import fit, fit_arrays_grouped
     from ..kernel.sample import sample_arrays_closest_grouped
+    from ._kernel import apply_grouped, as_columns, as_rows
 
-    key_fields = [df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    if agg not in _AGG_FACTORIES and agg != "median":
-        raise ValueError(f"unknown agg {agg!r}")
-
-    def make_agg():
-        if agg == "median":
-            # the queueAggregator case (CollectAggregator, reference
-            # BasicAggregators.scala:127-136 / Aggregator.scala:60-63): the
-            # whole window rides along and the aggregate is a function of
-            # its contents; empty windows are holes (None)
-            import statistics  # noqa: PLC0415
-
-            return kwin.CollectAggregator(
-                fn=lambda vals: statistics.median(vals) if vals else None
+    def _sweep_series(ts, value, validity):
+        return as_columns([
+            (t, a, d)
+            for (t, _content, d), a in kwin.window_sweep(
+                as_rows(ts, value, validity), window_width,
+                _aggregator(agg, timeunit), sample_rate, use_closest,
             )
-        cls = getattr(kwin, _AGG_FACTORIES[agg])
-        if agg == "integral":
-            return cls(timeunit)
-        return cls()
+            if a is not None
+        ])
 
-    from ._kernel import apply_per_bucket, apply_per_series
+    def _sweep_grouped(codes, ts, value, validity):
+        if sample_rate is not None:
+            rs = sample_arrays_closest_grouped(
+                codes, ts, value, validity, sample_rate
+            )
+            if rs is None:
+                return None
+            codes, ts, value, validity = rs
+        return kwin.window_sweep_grouped(
+            codes, ts, value, validity, window_width, agg=agg,
+            timeunit=timeunit,
+        )
 
     vectorizable = agg in kwin._GROUPED_AGGS and (
         sample_rate is None or use_closest
     )
-
-    def _sweep_seq(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        entries = list(
-            zip(pdf["ts"].tolist(), pdf["value"].tolist(), pdf["validity"].tolist())
-        )
-        out = []
-        for (ts, _content, validity), a in kwin.window_sweep(
-            entries, window_width, make_agg(), sample_rate, use_closest
-        ):
-            if a is not None:
-                out.append((ts, float(a), validity))
-        if compress:
-            out = fit(out, compress=True)
-        return pd.DataFrame(out, columns=["ts", "value", "validity"])
-
-    if not vectorizable:
-        return apply_per_series(df, key_cols, _sweep_seq, out_schema)
-
-    def _sweep_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort",
-                              ignore_index=True)
-        codes, uniques = pd.factorize(pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False)
-        c = codes.astype(np.int64)
-        t = pdf["ts"].to_numpy(np.int64)
-        v = pdf["value"].to_numpy(np.float64)
-        d = pdf["validity"].to_numpy(np.int64)
-        res = None
-        if sample_rate is not None:
-            rs = sample_arrays_closest_grouped(c, t, v, d, sample_rate)
-            if rs is not None:
-                c, t, v, d = rs
-                res = kwin.window_sweep_grouped(
-                    c, t, v, d, window_width, agg=agg, timeunit=timeunit
-                )
-        else:
-            res = kwin.window_sweep_grouped(
-                c, t, v, d, window_width, agg=agg, timeunit=timeunit
-            )
-        if res is None:
-            # packed-axis overflow: sequential per-series fallback
-            frames = []
-            for key, g in pdf.groupby(key_cols, sort=False):
-                if not isinstance(key, tuple):
-                    key = (key,)
-                r = _sweep_seq(key, g)
-                for col, kv in zip(key_cols, key):
-                    r[col] = kv
-                frames.append(r[out_names])
-            if not frames:
-                return pd.DataFrame(columns=out_names)
-            return pd.concat(frames, ignore_index=True)
-        oc, ot, ov, od = res
-        if compress:
-            keep, ot, ov, od = fit_arrays_grouped(oc, ot, ov, od, compress=True)
-            oc = oc[keep]
-        key_vals = uniques[oc].to_frame(index=False)
-        key_vals.columns = key_cols
-        out = pd.DataFrame({"ts": ot, "value": ov, "validity": od})
-        return pd.concat(
-            [key_vals.reset_index(drop=True), out], axis=1
-        )[out_names]
-
-    return apply_per_bucket(df, key_cols, _sweep_bucket, out_schema)
+    return apply_grouped(
+        df, key_cols, _sweep_grouped if vectorizable else None,
+        _sweep_series, compress=compress,
+    )
 
 
 def _sliding_sum_relational(
@@ -275,8 +227,6 @@ def _sliding_sum_relational(
     as null, like a pandas NaN across the Arrow boundary."""
     from .merge import _rle_repair
 
-    if window_width <= 0:
-        raise ValueError("Needs a strictly positive window size")
     w_key = Window.partitionBy(*key_cols)
     ent = df.select(*key_cols, "ts", "value", "validity").withColumn(
         "_maxu", F.max(F.col("ts") + F.col("validity")).over(w_key)
@@ -432,73 +382,20 @@ def rolling_values(
         raise ValueError(f"unsupported rolling agg {agg!r}")
     if agg in ("sum", "mean"):
         return _rolling_relational(df, key_cols, window_ms, agg, compress)
-    import numpy as np
-    import pandas as pd
-
     from ..kernel import window as kwin
-    from ..kernel.fitter import fit_arrays_grouped
-    from ._kernel import apply_per_bucket
+    from ._kernel import apply_grouped, as_columns, as_rows
 
-    key_fields = [df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
+    def _roll_series(ts, value, validity):
+        return as_columns(kwin.rolling(
+            as_rows(ts, value, validity), {"min": min, "max": max}[agg],
+            window_ms, compress=False,
+        ))
+
+    return apply_grouped(
+        df, key_cols, partial(kwin.rolling_grouped, window_ms=window_ms,
+                              agg=agg),
+        _roll_series, compress=compress,
     )
-    out_names = [f.name for f in out_schema.fields]
-    agg_fns = {"min": min, "max": max}
-
-    def _roll_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort",
-                              ignore_index=True)
-        codes, uniques = pd.factorize(pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False)
-        res = kwin.rolling_grouped(
-            codes.astype(np.int64),
-            pdf["ts"].to_numpy(np.int64),
-            pdf["value"].to_numpy(np.float64),
-            pdf["validity"].to_numpy(np.int64),
-            window_ms, agg=agg,
-        )
-        if res is None:
-            # packed-axis overflow: sequential per-series fallback
-            frames = []
-            for key, g in pdf.groupby(key_cols, sort=False):
-                out = kwin.rolling(
-                    list(zip(g["ts"], g["value"], g["validity"])),
-                    agg_fns[agg], window_ms, compress=False,
-                )
-                r = pd.DataFrame(out, columns=["ts", "value", "validity"])
-                for col, kv in zip(key_cols,
-                                   key if isinstance(key, tuple) else (key,)):
-                    r[col] = kv
-                frames.append(r[out_names])
-            merged = pd.concat(frames, ignore_index=True)
-            codes, uniques = pd.factorize(
-                pd.MultiIndex.from_frame(merged[key_cols]),
-                use_na_sentinel=False,
-            )
-            oc = codes.astype(np.int64)
-            ot = merged["ts"].to_numpy(np.int64)
-            ov = merged["value"].to_numpy(np.float64)
-            od = merged["validity"].to_numpy(np.int64)
-        else:
-            oc, ot, ov, od = res
-        if compress:
-            keep, ot, ov, od = fit_arrays_grouped(oc, ot, ov, od, compress=True)
-            oc = oc[keep]
-        key_vals = uniques[oc].to_frame(index=False)
-        key_vals.columns = key_cols
-        out = pd.DataFrame({"ts": ot, "value": ov, "validity": od})
-        return pd.concat(
-            [key_vals.reset_index(drop=True), out], axis=1
-        )[out_names]
-
-    return apply_per_bucket(df, key_cols, _roll_bucket, out_schema)
 
 
 def dynamic_window_exact(
@@ -519,36 +416,18 @@ def dynamic_window_exact(
     cumulative-stop-count sessionization) exist for column predicates -- the
     ts_dynamic_window oracle in __spark_entry__ shows the SQL shape.
     """
-    import pandas as pd
-
+    if agg not in _AGG_FACTORIES:
+        raise ValueError(f"unknown agg {agg!r}")
     from ..kernel import window as kwin
-    from ._kernel import apply_per_series
+    from ._kernel import apply_grouped, as_columns, as_rows
 
-    key_fields = [df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
-    )
+    def _dyn_series(ts, value, validity):
+        return as_columns(kwin.dynamic_window(
+            as_rows(ts, value, validity), start_pred, stop_pred,
+            partial(_aggregator, agg, timeunit),
+        ))
 
-    def make_agg():
-        cls = getattr(kwin, _AGG_FACTORIES[agg])
-        return cls(timeunit) if agg == "integral" else cls()
-
-    def _dyn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        entries = list(
-            zip(pdf["ts"].tolist(), pdf["value"].tolist(), pdf["validity"].tolist())
-        )
-        out = kwin.dynamic_window(entries, start_pred, stop_pred, make_agg)
-        return pd.DataFrame(
-            [(t, float(v), d) for t, v, d in out],
-            columns=["ts", "value", "validity"],
-        )
-
-    return apply_per_series(df, key_cols, _dyn, out_schema)
+    return apply_grouped(df, key_cols, None, _dyn_series)
 
 
 def dynamic_window_relational(
@@ -628,61 +507,18 @@ def sample_closest(
     sorts) -- dense-grid generation is the kernel's home turf. The kernel
     (kernel.sample.sample_arrays_closest) is pinned against the sequential
     sampler by fuzz and against DuckDB by the ts_sample_closest oracle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..kernel.fitter import fit_arrays_grouped
+    if rate <= 0:
+        raise ValueError(f"rate must be positive, got {rate!r}")
     from ..kernel.sample import (
         sample_arrays_closest,
         sample_arrays_closest_grouped,
     )
-    from ._kernel import apply_per_bucket
+    from ._kernel import apply_grouped
 
-    key_fields = [df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-            StructField("validity", LongType()),
-        ]
+    def _sample_series(ts, value, validity):
+        return sample_arrays_closest(ts, value, validity, int(ts[0]), rate)
+
+    return apply_grouped(
+        df, key_cols, partial(sample_arrays_closest_grouped, rate=rate),
+        _sample_series, compress=compress,
     )
-    out_names = [f.name for f in out_schema.fields]
-
-    def _sample_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_names)
-        pdf = pdf.sort_values([*key_cols, "ts"], kind="mergesort",
-                              ignore_index=True)
-        codes, uniques = pd.factorize(pd.MultiIndex.from_frame(pdf[key_cols]), use_na_sentinel=False)
-        ts = pdf["ts"].to_numpy(np.int64)
-        val = pdf["value"].to_numpy(np.float64)
-        dur = pdf["validity"].to_numpy(np.int64)
-        res = sample_arrays_closest_grouped(codes, ts, val, dur, rate)
-        if res is None:
-            # packed-axis overflow: per-series loop (correct, not batched)
-            starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
-            oc, og, ov, od = [], [], [], []
-            for s0, s1 in zip(starts, np.r_[starts[1:], codes.size]):
-                g, v, d = sample_arrays_closest(
-                    ts[s0:s1], val[s0:s1], dur[s0:s1], int(ts[s0]), rate
-                )
-                oc.append(np.full(len(g), codes[s0], np.int64))
-                og.append(np.asarray(g, np.int64))
-                ov.append(np.asarray(v, np.float64))
-                od.append(np.asarray(d, np.int64))
-            res = (np.concatenate(oc), np.concatenate(og),
-                   np.concatenate(ov), np.concatenate(od))
-        out_codes, g, v, d = res
-        if compress:
-            _keep, g, v, d = fit_arrays_grouped(out_codes, g, v, d,
-                                                compress=True)
-            out_codes = out_codes[_keep]
-        key_vals = uniques[out_codes].to_frame(index=False)
-        key_vals.columns = key_cols
-        out = pd.DataFrame({"ts": g, "value": v, "validity": d})
-        return pd.concat(
-            [key_vals.reset_index(drop=True), out], axis=1
-        )[out_names]
-
-    return apply_per_bucket(df, key_cols, _sample_bucket, out_schema)

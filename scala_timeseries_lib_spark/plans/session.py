@@ -9,6 +9,7 @@ defaults to ``local[$SPARK_GRAFT_CPUS]``.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -31,6 +32,17 @@ def env_positive_int(name: str, default: int) -> int:
     return value
 
 
+def _env_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS`` for ``local[...]``: ``*`` (default) or a
+    positive integer."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    if raw != "*" and not re.fullmatch(r"[1-9][0-9]*", raw):
+        raise ValueError(
+            f"$SPARK_GRAFT_CPUS must be '*' or a positive integer, got {raw!r}"
+        )
+    return raw
+
+
 def _default_driver_mem() -> str:
     """Size the local-mode JVM to the box (guide §5).
 
@@ -49,6 +61,12 @@ def _default_driver_mem() -> str:
     the driver does no data work and the submitted --driver-memory wins."""
     env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if env:
+        # a JVM size: MiB when unitless, else a b/k/m/g/t/p suffix
+        if not re.fullmatch(r"[1-9][0-9]*([kmgtp]b?|b)?", env, re.IGNORECASE):
+            raise ValueError(
+                "$SPARK_GRAFT_DRIVER_MEM must be a JVM memory size such as "
+                f"512m, 8g or 1024, got {env!r}"
+            )
         return env
     try:
         phys_gib = (
@@ -76,8 +94,7 @@ def get_spark(
       AQE's coalescing makes a high initial value cheap.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
+        master = f"local[{_env_cpus()}]"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -4,7 +4,7 @@ The default n_buckets is now derived from Catalyst's driver-side size
 estimate: tiny inputs get exactly one task wave (per-task Arrow overhead
 dominates them), huge inputs get bytes-bounded buckets (worker memory stays
 flat as data grows), and unusable estimates fall back to the old fixed
-4 * defaultParallelism. The integer SPARK_GRAFT_* settings fail with a
+4 * defaultParallelism. The SPARK_GRAFT_* settings fail with a
 message naming the variable when they are read.
 """
 
@@ -128,3 +128,31 @@ def test_shuffle_env_rejects_bad_values(spark, monkeypatch, raw):
     monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", raw)
     with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE"):
         get_spark()
+
+
+@pytest.mark.parametrize("raw,ok", [("*", True), ("4", True), ("0", False),
+                                    ("four", False), ("", False)])
+def test_cpus_env_validated(monkeypatch, raw, ok):
+    from scala_timeseries_lib_spark.plans.session import _env_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    if ok:
+        assert _env_cpus() == raw
+    else:
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            _env_cpus()
+
+
+@pytest.mark.parametrize("raw,ok", [("512m", True), ("8g", True),
+                                    ("1024", True), ("2GB", True),
+                                    ("8 g", False), ("0g", False),
+                                    ("lots", False)])
+def test_driver_mem_env_validated(monkeypatch, raw, ok):
+    from scala_timeseries_lib_spark.plans.session import _default_driver_mem
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", raw)
+    if ok:
+        assert _default_driver_mem() == raw
+    else:
+        with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
+            _default_driver_mem()

@@ -259,10 +259,12 @@ def test_nan_values_match_kernel_split(spark):
     assert any(None in r for r in _ref_zip(a, b))
 
 
-def test_skew_guard_routes_hot_keys(spark):
+def test_skew_guard_routes_hot_keys(spark, tmp_path_factory):
     """The guard must detect a key above hot_threshold WITHOUT a caller
     hint, merge it through an auto-sized time_slice, keep the cold keys on
-    the plain plan, and produce output identical to the numpy kernel."""
+    the plain plan, and produce output identical to the numpy kernel. With
+    a checkpoint dir set, the exact route materializes into it (reliable
+    storage) instead of executor-local blocks."""
     from pyspark.sql import functions as F
 
     a, b = _mk(spark, 201), _mk(spark, 202)
@@ -282,11 +284,14 @@ def test_skew_guard_routes_hot_keys(spark):
     right = b.unionByName(hot_b)
 
     expected = _ref_merge(left, right, "plus")
+    ckpt = tmp_path_factory.mktemp("guard_checkpoint")
+    spark.sparkContext.setCheckpointDir(str(ckpt))
     # guard fires (threshold 1000 < 10k hot entries): split routing
     routed = _canon(merge_series(
         left, right, ["user_id"], op="plus", hot_threshold=1000
     ))
     assert routed == expected
+    assert any(p.is_file() for p in ckpt.rglob("*"))
     # guard present but nothing hot: plain relational, same output
     unrouted = _canon(merge_series(left, right, ["user_id"], op="plus"))
     assert unrouted == expected

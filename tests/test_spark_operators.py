@@ -13,10 +13,16 @@ from scala_timeseries_lib_spark.kernel import fitter as kfitter
 from scala_timeseries_lib_spark.kernel import integral as kintegral
 from scala_timeseries_lib_spark.kernel import merge as kmerge
 from scala_timeseries_lib_spark.kernel import sample as ksample
+from scala_timeseries_lib_spark.kernel import window as kwindow
 from scala_timeseries_lib_spark.operators import series_ops as ops
 from scala_timeseries_lib_spark.operators.entries import fit_entries
 from scala_timeseries_lib_spark.operators.merge import merge_series
-from scala_timeseries_lib_spark.operators.window import sliding_grid_agg
+from scala_timeseries_lib_spark.operators.window import (
+    rolling_values,
+    sample_closest,
+    sliding_grid_agg,
+    sliding_window_exact,
+)
 
 pytestmark = pytest.mark.spark
 
@@ -414,6 +420,62 @@ class TestMergeCallableAndDefaults:
                          right_default=1.0, time_slice=10_000)
 
 
+# three series spanning 2^61 ms: in one bucket, any kernel's offset-packed
+# axis (n_series * span) overflows int64
+_WIDE = {
+    "a": [(1_000, 1.0, 1_000), (1 << 61, 2.0, 1_000)],
+    "b": [(2_000, 3.0, 1_000), ((1 << 61) - 5_000, 4.0, 1_000)],
+    "c": [(1_500, 5.0, 2_000)],
+}
+# coarse enough that resampling the wide series makes a handful of points
+_WIDE_RATE = 1 << 58
+
+
+def _median(vals):
+    import statistics
+
+    return statistics.median(vals) if vals else None
+
+
+_CODEC_CASES = {
+    "fit_entries": (
+        lambda df: fit_entries(df, ["key"]),
+        kfitter.fit,
+    ),
+    "rolling_min": (
+        lambda df: rolling_values(df, ["key"], 10_000, agg="min"),
+        lambda e: kwindow.rolling(e, min, 10_000),
+    ),
+    "rolling_max": (
+        lambda df: rolling_values(df, ["key"], 10_000, agg="max"),
+        lambda e: kwindow.rolling(e, max, 10_000),
+    ),
+    "sample_closest": (
+        lambda df: sample_closest(df, ["key"], _WIDE_RATE),
+        lambda e: ksample.sample(e, e[0][0], _WIDE_RATE, use_closest=True),
+    ),
+    "sliding_median": (
+        lambda df: sliding_window_exact(df, ["key"], 10_000, agg="median"),
+        lambda e: kwindow.sliding_window(
+            e, 10_000, kwindow.CollectAggregator(fn=_median)),
+    ),
+    "sliding_resampled_mean": (
+        lambda df: sliding_window_exact(df, ["key"], 2 * _WIDE_RATE,
+                                        agg="mean", sample_rate=_WIDE_RATE),
+        lambda e: kwindow.sliding_window(
+            e, 2 * _WIDE_RATE, kwindow.MeanAggregator(),
+            sample_rate=_WIDE_RATE),
+    ),
+    "merge_callable": (
+        lambda df: merge_series(df, df.withColumn("ts", df.ts + 500),
+                                ["key"], op=kmerge.op_non_strict_plus),
+        lambda e: kmerge.merge_entries(
+            e, [(t + 500, v, d) for t, v, d in e],
+            kmerge.op_non_strict_plus),
+    ),
+}
+
+
 class TestOffsetPackingOverflowGuard:
     def test_overflow_shape_falls_back_per_series(self, spark):
         """codes.max()*stride >= 2^62 must take the per-series path and
@@ -481,6 +543,75 @@ class TestOffsetPackingOverflowGuard:
                 left[k], right.get(k, []), kmerge.op_non_strict_plus
             )
             assert collect_series(summed, k) == expected
+
+    @pytest.mark.parametrize("case", sorted(_CODEC_CASES))
+    def test_codec_overflow_falls_back_per_series(self, spark, monkeypatch,
+                                                  case):
+        """Every Arrow-kernel operator on a 2^61-span bucket: the packed
+        axis of three series overflows, so the codec runs the sequential
+        kernel per series; rows equal that kernel per key."""
+        from scala_timeseries_lib_spark.operators import _kernel
+
+        # one salt bucket, so all three series share the packed axis
+        monkeypatch.setattr(_kernel, "_default_buckets", lambda df: 1)
+        run, ref = _CODEC_CASES[case]
+        got = run(make_df(spark, _WIDE))
+        for k, entries in _WIDE.items():
+            assert collect_series(got, k) == ref(entries)
+
+    def test_grouped_kernels_overflow_on_wide_fixture(self):
+        codes = np.array([0, 0, 1, 1, 2], np.int64)
+        ts = np.array([e[0] for v in _WIDE.values() for e in v], np.int64)
+        val = np.array([e[1] for v in _WIDE.values() for e in v])
+        dur = np.array([e[2] for v in _WIDE.values() for e in v], np.int64)
+        assert kwindow.rolling_grouped(codes, ts, val, dur, 10_000,
+                                       "min") is None
+        assert ksample.sample_arrays_closest_grouped(
+            codes, ts, val, dur, _WIDE_RATE) is None
+
+
+class TestKernelRouteArguments:
+    """Bad kernel-route arguments fail when the operator is called (the
+    plans are lazy), not inside a Python worker at action time."""
+
+    def test_sample_closest_rejects_non_positive_rate(self, spark, series3):
+        df = series3[2]
+        for rate in (0, -5):
+            with pytest.raises(ValueError, match="rate"):
+                sample_closest(df, ["key"], rate)
+
+    def test_sliding_exact_rejects_bad_rate_and_width(self, spark, series3):
+        df = series3[2]
+        with pytest.raises(ValueError, match="sample_rate"):
+            sliding_window_exact(df, ["key"], 10_000, agg="median",
+                                 sample_rate=0)
+        with pytest.raises(ValueError, match="sample_rate"):
+            sliding_window_exact(df, ["key"], 10_000, agg="mean",
+                                 sample_rate=-1)
+        for agg in ("median", "max"):
+            with pytest.raises(ValueError, match="window size"):
+                sliding_window_exact(df, ["key"], 0, agg=agg)
+
+    def test_dynamic_window_rejects_unknown_agg(self, spark, series3):
+        from scala_timeseries_lib_spark.operators.window import (
+            dynamic_window_exact,
+        )
+
+        df = series3[2]
+        with pytest.raises(ValueError, match="unknown agg"):
+            dynamic_window_exact(df, ["key"], lambda e: True,
+                                 lambda e: False, agg="median")
+
+    def test_sample_kernels_reject_non_positive_rate(self):
+        one = np.array([0], np.int64)
+        for rate in (0, -1):
+            with pytest.raises(ValueError, match="rate"):
+                ksample.sample([(0, 1.0, 10)], 0, rate, use_closest=True)
+            with pytest.raises(ValueError, match="rate"):
+                ksample.sample_arrays_closest(one, [1.0], [10], 0, rate)
+            with pytest.raises(ValueError, match="rate"):
+                ksample.sample_arrays_closest_grouped(one, one, [1.0], [10],
+                                                      rate)
 
 
 class TestEntityCatalog:
